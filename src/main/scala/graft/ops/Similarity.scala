@@ -1303,8 +1303,7 @@ object Similarity {
     * Scale shape: the pool comes from the bounded top-k aggregate
     * ([[cosineTopK]]), vectors re-attach by ONE keyed join, and the
     * greedy loop runs in `mapGroups` over ≤ poolK rows per query —
-    * the bounded-group precedent (Em's per-area mapGroups), sequential
-    * by nature, never more than poolK·dim doubles of state. Engine/
+    * a bounded group, sequential by nature, never more than poolK·dim doubles of state. Engine/
     * oracle determinism: rel and every candidate-candidate similarity
     * round at 6dp BEFORE entering the score, the score re-rounds at
     * 6dp before the argmax, ties break on id — and λ = 0.5 keeps

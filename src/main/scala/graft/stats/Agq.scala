@@ -1,9 +1,8 @@
 package graft.stats
 
 import breeze.linalg.{eigSym, DenseMatrix, DenseVector}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.functions.col
 
 /** Adaptive Gauss-Hermite maximum-likelihood fit of the logistic
   * random-intercept model — the engine's faithful counterpart of the
@@ -20,21 +19,21 @@ import org.apache.spark.storage.StorageLevel
   * with the per-area integral evaluated by Q-node Gauss-Hermite
   * quadrature ADAPTED to each area: nodes are centered at the area's
   * Laplace mode vhat_i and scaled by its curvature tau_i (both from
-  * [[Em.laplaceModes]] — one grouped-aggregation pass per Newton step,
-  * never a per-area rowset in a task). lme4 does the same centering via
+  * the EM's Laplace solver over the data's [[CellDesign]] — one design
+  * `aggregate` per Newton step). lme4 does the same centering via
   * PIRLS; the quadrature rule itself (Golub-Welsch on the Jacobi
   * matrix) is the standard construction.
   *
   * Scale shape: fixing the centering (vhat_i, tau_i), the quadrature
   * objective is exactly differentiable in (beta, log sigma), so the
   * inner optimization is driver L-BFGS where EVERY evaluation is ONE
-  * `treeAggregate` over the cached design RDD computing per-(area,
-  * node) sufficient statistics — an O(areas x Q x features) result,
-  * dimension-sized regardless of row count. An outer fixed-point loop
+  * design `aggregate` computing per-(area, node) sufficient statistics
+  * — an O(areas x Q x features) result, dimension-sized regardless of
+  * row count. An outer fixed-point loop
   * re-adapts the centering at the updated parameters until the
   * estimates stabilize (standard adaptive-quadrature practice). Total
-  * cluster work per outer round: O(Newton passes + L-BFGS evals) full
-  * passes over cached data, same complexity class as [[Em.fit]].
+  * work per outer round: O(Newton passes + L-BFGS evals) passes over
+  * the cells, same complexity class as [[Em.fit]].
   */
 object Agq {
 
@@ -73,54 +72,39 @@ object Agq {
 
   private val halfLog2Pi = 0.5 * math.log(2 * math.Pi)
 
-  /** Per-(area, node) sufficient statistics from one distributed pass:
-    * for each area i and node position v_iq,
-    *   S(i,q)  = sum_j y_j eta - log1pexp(eta),   eta = x_j'beta + v_iq
-    *   G(i,q,) = sum_j (y_j - sigmoid(eta)) x_j
-    * Flat arrays indexed (ai*Q + q) and ((ai*Q + q)*k + f); the result
-    * is O(areas x Q x k) doubles — dimension-sized, safe to reduce to
-    * the driver at any row count.
+  /** Per-(area, node) sufficient statistics from one design
+    * `aggregate`: for each area i and node position v_iq, cell-weighted,
+    *   S(i,q)  = sum_c sumY_c eta - m_c log1pexp(eta),   eta = x_c'beta + v_iq
+    *   G(i,q,) = sum_c (sumY_c - m_c sigmoid(eta)) x_c
+    * Flat arrays indexed (ai*Q + q) and ((ai*Q + q)*k + f), ai the
+    * design's area index; the result is O(areas x Q x k) doubles —
+    * dimension-sized, safe to reduce to the driver at any row count.
     */
-  private def nodeStats(design: RDD[(Double, Array[Double], String)],
-                        areaIndex: Map[String, Int],
-                        nodesByArea: Array[Array[Double]],
-                        beta: Array[Double]): (Array[Double], Array[Double]) = {
-    val sc = design.sparkContext
+  private[graft] def nodeStats(d: CellDesign, nodesByArea: Array[Array[Double]],
+                               beta: Array[Double]): (Array[Double], Array[Double]) = {
     val nA = nodesByArea.length
     val q = nodesByArea(0).length
     val k = beta.length
-    val bcNodes = sc.broadcast(nodesByArea)
-    val bcIdx = sc.broadcast(areaIndex)
-    try {
-      design.treeAggregate(
-        (new Array[Double](nA * q), new Array[Double](nA * q * k)))(
-        seqOp = { case ((s, g), (y, x, area)) =>
-          val ai = bcIdx.value(area)
-          var eta0 = 0.0
-          var i = 0
-          while (i < k) { eta0 += beta(i) * x(i); i += 1 }
-          val vs = bcNodes.value(ai)
-          var r = 0
-          while (r < q) {
-            val eta = eta0 + vs(r)
-            val idx = ai * q + r
-            s(idx) += y * eta - Glmm.log1pExp(eta)
-            val resid = y - Glmm.sigmoidD(eta)
-            i = 0
-            while (i < k) { g(idx * k + i) += resid * x(i); i += 1 }
-            r += 1
-          }
-          (s, g)
-        },
-        combOp = { case ((s1, g1), (s2, g2)) =>
-          var i = 0
-          while (i < s1.length) { s1(i) += s2(i); i += 1 }
+    d.aggregate((new Array[Double](nA * q), new Array[Double](nA * q * k)))({
+      case ((s, g), c) =>
+        var eta0 = 0.0
+        var i = 0
+        while (i < k) { eta0 += beta(i) * c.x(i); i += 1 }
+        val vs = nodesByArea(c.area)
+        var r = 0
+        while (r < q) {
+          val eta = eta0 + vs(r)
+          val idx = c.area * q + r
+          s(idx) += c.sumY * eta - c.m * Glmm.log1pExp(eta)
+          val resid = c.sumY - c.m * Glmm.sigmoidD(eta)
           i = 0
-          while (i < g1.length) { g1(i) += g2(i); i += 1 }
-          (s1, g1)
-        },
-        depth = 2)
-    } finally { bcNodes.destroy(); bcIdx.destroy() }
+          while (i < k) { g(idx * k + i) += resid * c.x(i); i += 1 }
+          r += 1
+        }
+        (s, g)
+    }, { case ((s1, g1), (s2, g2)) =>
+      (CellDesign.addInto(s1, s2), CellDesign.addInto(g1, g2))
+    })
   }
 
   /** Marginal NLL and gradient in (beta, log sigma) for FIXED node
@@ -180,74 +164,56 @@ object Agq {
     (nll, DenseVector(grad), post)
   }
 
-  /** [[nodeStats]] over driver-local sufficient-statistics cells
-    * ([[Em.Cell]]): the per-unit sums collapse exactly to cell-weighted
-    * sums (y enters linearly), so
-    *   S(i,q) += sumY eta - m log1pexp(eta),
-    *   G      += (sumY - m sigmoid(eta)) x.
+  /** Fit by outer re-adaptation + inner L-BFGS. `init` seeds both the
+    * first Laplace centering and the optimizer ([[Glmm.fitLogistic]] +
+    * a prior sigma guess is the natural initializer, mirroring the
+    * reference's glmer-then-EM ordering).
+    *
+    * The design is collapsed to its [[CellDesign]] first (one shuffle,
+    * exact — see [[Em.fit]]). A dimension-sized table runs the whole
+    * quadrature fit on the driver; a larger one stays distributed, one
+    * `treeAggregate` over the cached cells per Newton pass and per
+    * L-BFGS evaluation.
+    *
+    * Boundary note: when the data carry little between-area variance
+    * the ML optimum sits near sigma = 0 and the log-sigma direction
+    * flattens; Breeze may log a recoverable "line search zoom failed"
+    * reset there (lme4 emits the analogous boundary-fit warning). The
+    * returned fit is still the converged interior-or-near-boundary
+    * optimum — `converged` reflects the OUTER fixed point.
     */
-  private def nodeStatsLocal(cells: Array[Em.Cell],
-                             areaIndex: Map[String, Int],
-                             nodesByArea: Array[Array[Double]],
-                             beta: Array[Double]): (Array[Double], Array[Double]) = {
-    val nA = nodesByArea.length
-    val q = nodesByArea(0).length
-    val k = beta.length
-    val s = new Array[Double](nA * q)
-    val g = new Array[Double](nA * q * k)
-    var ci = 0
-    while (ci < cells.length) {
-      val c = cells(ci)
-      val ai = areaIndex(c.area)
-      var eta0 = 0.0
-      var i = 0
-      while (i < k) { eta0 += beta(i) * c.x(i); i += 1 }
-      val vs = nodesByArea(ai)
-      var r = 0
-      while (r < q) {
-        val eta = eta0 + vs(r)
-        val idx = ai * q + r
-        s(idx) += c.sumY * eta - c.m * Glmm.log1pExp(eta)
-        val resid = c.sumY - c.m * Glmm.sigmoidD(eta)
-        i = 0
-        while (i < k) { g(idx * k + i) += resid * c.x(i); i += 1 }
-        r += 1
-      }
-      ci += 1
-    }
-    (s, g)
-  }
+  def fit(df: DataFrame, yCol: String, featureCols: Seq[String],
+          areaCol: String, init: Em.Params, numNodes: Int = 9,
+          tol: Double = 1e-3, maxOuter: Int = 15,
+          innerIter: Int = 40): Fit =
+    CellDesign.using(df, yCol, featureCols, col(areaCol))(
+      fitDesign(_, init, numNodes, tol, maxOuter, innerIter))
 
-  /** The outer re-adaptation + inner L-BFGS loop, parameterized over
-    * how modes and node statistics are produced (distributed passes or
-    * driver-local cell loops — identical math either way).
-    */
-  private def fitCore(
-      modesFn: (Em.Params, Map[String, Double]) => Seq[Em.AreaMode],
-      statsFn: (Map[String, Int], Array[Array[Double]], Array[Double]) => (Array[Double], Array[Double]),
-      k: Int, init: Em.Params, numNodes: Int, tol: Double, maxOuter: Int,
-      innerIter: Int): Fit = {
+  /** [[fit]] over an already-built design. */
+  private[graft] def fitDesign(d: CellDesign, init: Em.Params, numNodes: Int,
+                               tol: Double, maxOuter: Int,
+                               innerIter: Int): Fit = {
+    val k = d.k
     val (z, w) = hermiteNodes(numNodes)
     val sqrt2 = math.sqrt(2.0)
+    def nodes(modes: Seq[Em.AreaMode]): Array[Array[Double]] =
+      modes.map(m => z.map(zq => m.vhat + sqrt2 * m.tau * zq)).toArray
+    val scale = 1.0 / d.totalN
     var beta = init.beta
     var sigma = math.sqrt(init.sigmaSq)
     var modes: Seq[Em.AreaMode] = Nil
     var outer = 0
     var converged = false
     while (outer < maxOuter && !converged) {
-      modes = modesFn(Em.Params(beta, sigma * sigma),
+      modes = Em.laplace(d, Em.Params(beta, sigma * sigma), 3.0,
         modes.map(m => m.area -> m.vhat).toMap)
-      val areaIndex = modes.map(_.area).zipWithIndex.toMap
-      val nodesByArea = modes.map(m =>
-        z.map(zq => m.vhat + sqrt2 * m.tau * zq)).toArray
-      val scale = 1.0 / math.max(1L, modes.map(_.n).sum).toDouble
+      val nodesByArea = nodes(modes)
       val thetaInit = DenseVector((beta.toArray :+
         // clamp keeps the unconstrained parametrization sane if a
         // caller seeds sigma ~ 0; optimum interior for any real fit
         math.max(math.log(math.max(sigma, 1e-6)), -10.0)): _*)
       val theta = Optimize.lbfgsMin({ th =>
-        val b = th(0 until k).toArray
-        val stats = statsFn(areaIndex, nodesByArea, b)
+        val stats = nodeStats(d, nodesByArea, th(0 until k).toArray)
         val (nll, grad, _) = marginalNllGrad(stats, modes, nodesByArea,
           z, w, th)
         (nll * scale, grad * scale)
@@ -264,10 +230,8 @@ object Agq {
     // L-BFGS's final evaluation is at (or next to) the returned
     // minimizer; recompute exactly at the fitted theta for the
     // reported logLik/BLUPs
-    val areaIndex = modes.map(_.area).zipWithIndex.toMap
-    val nodesByArea = modes.map(m =>
-      z.map(zq => m.vhat + sqrt2 * m.tau * zq)).toArray
-    val stats = statsFn(areaIndex, nodesByArea, beta.toArray)
+    val nodesByArea = nodes(modes)
+    val stats = nodeStats(d, nodesByArea, beta.toArray)
     val thetaFit = DenseVector((beta.toArray :+ math.log(sigma)): _*)
     val (nll, _, post) = marginalNllGrad(stats, modes, nodesByArea, z, w,
       thetaFit)
@@ -280,73 +244,5 @@ object Agq {
       (m.area, mean, math.sqrt(math.max(0.0, m2 - mean * mean)))
     }
     Fit(beta, sigma, -nll, ranef, outer, converged)
-  }
-
-  /** Fit by outer re-adaptation + inner L-BFGS. `init` seeds both the
-    * first Laplace centering and the optimizer ([[Glmm.fitLogistic]] +
-    * a prior sigma guess is the natural initializer, mirroring the
-    * reference's glmer-then-EM ordering).
-    *
-    * With `compress = true` (default) the design is collapsed to its
-    * [[Em.Cell]] table first (see Em.fit's doc — one shuffle, exact);
-    * when the cell table fits `maxLocalCells` the whole quadrature fit
-    * runs driver-side with zero further cluster work. Otherwise the
-    * distributed unit-level path runs as before.
-    *
-    * Boundary note: when the data carry little between-area variance
-    * the ML optimum sits near sigma = 0 and the log-sigma direction
-    * flattens; Breeze may log a recoverable "line search zoom failed"
-    * reset there (lme4 emits the analogous boundary-fit warning). The
-    * returned fit is still the converged interior-or-near-boundary
-    * optimum — `converged` reflects the OUTER fixed point.
-    */
-  def fit(df: DataFrame, yCol: String, featureCols: Seq[String],
-          areaCol: String, init: Em.Params, numNodes: Int = 9,
-          tol: Double = 1e-3, maxOuter: Int = 15,
-          innerIter: Int = 40, compress: Boolean = true,
-          maxLocalCells: Int = 1 << 16): Fit = {
-    import org.apache.spark.sql.functions.col
-    val k = featureCols.length + 1
-    val localCells: Option[Array[Em.Cell]] =
-      if (compress)
-        Em.collectCellsIfSmall(
-          Em.compressCells(df, yCol, featureCols, areaCol),
-          featureCols.length, maxLocalCells)
-      else None
-    localCells match {
-      case Some(cells) =>
-        val byArea: Array[(String, Array[Em.Cell])] =
-          cells.groupBy(_.area).toArray.sortBy(_._1)
-        fitCore(
-          (p, warm) => Em.laplaceModesLocal(byArea, p, 3.0, warm),
-          (ai, nodes, b) => nodeStatsLocal(cells, ai, nodes, b),
-          k, init, numNodes, tol, maxOuter, innerIter)
-      case None =>
-        // iteration-invariant slice persisted ONCE (same rationale as
-        // Em.fit): laplaceModes re-projects x'beta from it per pass
-        val slim = df.select(
-            (col(areaCol) +: featureCols.map(col)) :+ col(yCol): _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val design = slim.select(
-            (col(yCol).cast("double") +: featureCols.map(c => col(c).cast("double"))) :+
-              col(areaCol).cast("string"): _*)
-          .rdd.map { r =>
-            val x = new Array[Double](k)
-            x(0) = 1.0
-            var i = 0
-            while (i < k - 1) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-            (r.getDouble(0), x, r.getString(k))
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-        design.count()
-        try fitCore(
-          (p, warm) => Em.laplaceModes(slim, p, featureCols, areaCol,
-            yCol, warmStart = warm),
-          (ai, nodes, b) => nodeStats(design, ai, nodes, b),
-          k, init, numNodes, tol, maxOuter, innerIter)
-        finally {
-          design.unpersist(blocking = false)
-          slim.unpersist(blocking = false)
-        }
-    }
   }
 }

@@ -86,12 +86,11 @@ object Bootstrap {
     * Default concurrency 2 — a LIBRARY default sized for memory
     * safety: each in-flight replicate caches its simulated survey, so
     * the default bounds peak storage pressure for arbitrary callers
-    * (ADVICE r14). Callers whose replicates collapse to the
-    * DRIVER-LOCAL cell fast path (Em.fitLocal — single-threaded
-    * quadrature math per replicate, cluster idle) should pass a higher
-    * value to overlap those fits (guide §2.6); the m05/m11 bench
-    * entries pass 8, the round-14-measured sweet spot (m11 8.12 ->
-    * 6.29 s solo).
+    * (ADVICE r14). Callers whose replicates' cell designs fit on the
+    * driver (single-threaded EM math per replicate, cluster idle)
+    * should pass a higher value to overlap those fits (guide §2.6);
+    * the m05/m11 bench entries pass 8, the round-14-measured sweet spot
+    * (m11 8.12 -> 6.29 s solo).
     *
     * Per-replicate EM initialization (`initScheme`):
     *   - `"reference"` (default) — the reference's scheme
@@ -103,8 +102,6 @@ object Bootstrap {
     *     the simulated outcome (+ truth sigma^2). A deliberate
     *     divergence: starts near the optimum so a small `emIters` cap
     *     suffices — the bench configuration.
-    *   - `"truth"` — seed from the truth params. Cheapest; biases MSPE
-    *     optimistic when emIters is small. Spec'd as a divergence.
     */
   def mspe(small: DataFrame, big: DataFrame, yCol: String,
            featureCols: Seq[String], areaCol: String, wCol: String,
@@ -112,8 +109,8 @@ object Bootstrap {
            seed: Long = 42L, numDraws: Int = 200, emIters: Int = 5,
            ebpDraws: Int = 100, initScheme: String = "reference",
            tol: Double = 0.01, concurrency: Int = 2): DataFrame = {
-    require(Set("reference", "refit", "truth")(initScheme),
-      s"initScheme must be reference|refit|truth, got $initScheme")
+    require(Set("reference", "refit")(initScheme),
+      s"initScheme must be reference|refit, got $initScheme")
     val areas = big.select(areaCol).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     val sigma = math.sqrt(truth.sigmaSq)
@@ -121,16 +118,16 @@ object Bootstrap {
       val vB = drawAreaEffects(areas, sigma, seed, b)
       val sim = simulateOutcome(small, truth.beta, featureCols, areaCol, vB,
         idCols, seed, b).cache()
-      val init = initScheme match {
-        case "reference" => Em.Params(
-          DenseVector.fill(featureCols.length + 1)(0.1), 0.1 * 0.1)
-        case "refit" => Em.Params(
-          Glmm.fitLogistic(sim, "y_sim", featureCols), truth.sigmaSq)
-        case _ => truth
-      }
-      val fit = Em.fit(sim, "y_sim", featureCols, areaCol, init,
-        numDraws = numDraws, tol = tol, maxIter = emIters, seed = seed + b)
-      sim.unpersist(blocking = false)
+      val fit =
+        try {
+          val init =
+            if (initScheme == "refit") Em.Params(
+              Glmm.fitLogistic(sim, "y_sim", featureCols), truth.sigmaSq)
+            else Em.Params(
+              DenseVector.fill(featureCols.length + 1)(0.1), 0.1 * 0.1)
+          Em.fit(sim, "y_sim", featureCols, areaCol, init,
+            numDraws = numDraws, tol = tol, maxIter = emIters, seed = seed + b)
+        } finally sim.unpersist(blocking = false)
       val est = Em.ebp(big, fit.params, featureCols, areaCol, wCol,
         fit.draws, ebpDraws)
       val tru = replicateTruth(big, truth.beta, featureCols, areaCol, wCol, vB)

@@ -1,10 +1,8 @@
 package graft.stats
 
 import breeze.linalg.DenseVector
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.util.hashing.MurmurHash3
 
 import graft.etl.Encodings
@@ -14,22 +12,19 @@ import graft.rel.Relational
   * the reference's core algorithm (SURVEY.md M3-M5; `Method_code.Rmd:
   * 215-454`, paper arXiv:2305.12336).
   *
+  * The data enter only through their [[CellDesign]] (one shuffle).
   * Per EM iteration:
-  *   1. linear predictors x'beta        — Column expression, no action
-  *   2. per-area Laplace mode/curvature — safeguarded Newton root-find
-  *      of g'(v), one grouped-aggregation pass per Newton step over all
-  *      areas at once (partial map-side aggregation; no task ever holds
-  *      an area's rowset)
-  *   3. Monte-Carlo draws v~N(vhat,tau) — driver-side keyed RNG
+  *   1. per-area Laplace mode/curvature — safeguarded Newton root-find
+  *      of g'(v), one design `aggregate` per Newton step over all areas
+  *      at once
+  *   2. Monte-Carlo draws v~N(vhat,tau) — driver-side keyed RNG
   *      (deterministic in (seed, iteration, area); areas x draws is
   *      dimension-sized, so no cluster work needed)
-  *   4a. sigma^2 closed-form maximizer of the adjusted-likelihood
+  *   3a. sigma^2 closed-form maximizer of the adjusted-likelihood
   *      Q-function (SURVEY.md Q2): sigma^2 = mean_r(sum_i n_i v_ir^2)/(n-2)
-  *   4b. beta via driver L-BFGS; each objective call is ONE
-  *      `treeAggregate` pass over the cached design RDD with the draw
-  *      table BROADCAST — the units-x-draws "join" is computed on the
-  *      fly per row, never materialized (SURVEY.md §7 risk 2: this is
-  *      what keeps the hot loop viable at 100 TB).
+  *   3b. beta via driver L-BFGS; each objective call is ONE design
+  *      `aggregate` — the cells-x-draws "join" is computed on the fly
+  *      per cell, never materialized (SURVEY.md §7 risk 2).
   *
   * Numerical divergences from the literal R (documented, intended
   * semantics per SURVEY.md Q1-Q4): likelihoods in log space (Q3), the
@@ -46,161 +41,95 @@ object Em {
                  draws: Map[String, Array[Double]], iters: Int,
                  converged: Boolean)
 
-  /** One distinct-covariate cell of a logistic design: `m` rows share
-    * the covariate vector `x` (intercept at index 0) in `area`, of
-    * which `sumY` have y = 1. Every objective this file optimizes
-    * depends on the data ONLY through (area, x) — y enters linearly —
-    * so the per-unit likelihood sums collapse EXACTLY to
-    * cell-weighted sums: sum_j f(eta_j) = sum_cells m_c f(eta_c) and
-    * sum_j y_j g(eta_j) = sum_cells sumY_c g(eta_c).
-    *
-    * This is the frequency-weight sufficient-statistics trick (R's
-    * `glm(weights=)`): for categorical designs — the reference's model
-    * exactly (area x two binary indicators = areas x 4 cells) — the
-    * design compresses from N rows to a DIMENSION-sized cell table in
-    * ONE map-side-combining shuffle, after which the entire EM inner
-    * loop costs O(cells x draws) per evaluation instead of
-    * O(rows x draws). At 100 TB this is the difference between an EM
-    * iteration being ~20 full-data passes and being one grouped
-    * aggregation followed by driver arithmetic.
-    */
-  case class Cell(area: String, x: Array[Double], m: Long, sumY: Double)
-
-  /** Step 2 — per-area Laplace approximation. Maximizes
+  /** Step 1 — per-area Laplace approximation. Maximizes
     *   log g(v) = -v^2/(2 sigma^2) + sum_j [ y_j (xb_j+v) - log1pexp(xb_j+v) ]
     * over v in [-vBound, vBound] (reference bound 3, Method_code.Rmd:220)
     * and returns curvature tau^2 = (1/sigma^2 + sum_j p_j (1-p_j))^-1.
-    *
-    * Scale shape: log g is strictly concave, so the mode is the unique
-    * root of g'(v) = -v/sigma^2 + sum_j (y_j - p_j(v)) — found by a
-    * driver-coordinated safeguarded Newton (bisection fallback keeps a
-    * bracket, since g' is strictly decreasing). Every Newton pass is
-    * ONE grouped aggregation computing the per-area sufficient
-    * statistics (sum(y-p), sum p(1-p), n) for ALL still-unconverged
-    * areas simultaneously — no task ever materializes an area's rowset
-    * (the old mapGroups formulation held whole areas in single-task
-    * arrays, an OOM at 100x if any area is large). Converged areas drop
-    * out of the broadcast v-table, so later passes touch fewer rows.
+    * Builds the [[CellDesign]] of `df` and runs [[laplace]] on it.
     */
   def laplaceModes(df: DataFrame, params: Params, featureCols: Seq[String],
                    areaCol: String, yCol: String,
                    vBound: Double = 3.0,
-                   warmStart: Map[String, Double] = Map.empty): Seq[AreaMode] = {
-    // unit-level rows are the m = 1 special case of the weighted core
-    // (1.0 * p == p exactly, so this wrapper is float-identical to the
-    // historical unit-level formulation)
-    val base0 = df.select(col(areaCol).cast("string").as("area"),
-        Glmm.xBetaCol(params.beta, featureCols).as("xb"),
-        lit(1.0).as("m"),
-        col(yCol).cast("double").as("sy"))
-    laplaceCore(base0, df.storageLevel != StorageLevel.NONE,
-      params.sigmaSq, vBound, warmStart)
-  }
+                   warmStart: Map[String, Double] = Map.empty): Seq[AreaMode] =
+    CellDesign.using(df, yCol, featureCols, col(areaCol))(
+      laplace(_, params, vBound, warmStart))
 
-  /** [[laplaceModes]] over a compressed cell table (columns: area,
-    * featureCols..., m, sumY — see [[Cell]]). Same math, cell-weighted:
-    * g'(v) = sum_c (sumY_c - m_c p_c) - v/sigma^2,
-    * info   = sum_c m_c p_c (1-p_c) + 1/sigma^2.
+  /** g'(v) and -g''(v) per area at the per-area points `v`, cell-weighted:
+    *   g'(v) = sum_c (sumY_c - m_c p_c) - v/sigma^2,
+    *   info  = sum_c m_c p_c (1-p_c) + 1/sigma^2,   p_c = sigmoid(x_c'beta + v).
+    * One [[CellDesign.aggregate]] for all areas at once.
     */
-  def laplaceModesCells(cellsDf: DataFrame, params: Params,
-                        featureCols: Seq[String], vBound: Double = 3.0,
-                        warmStart: Map[String, Double] = Map.empty): Seq[AreaMode] = {
-    val base0 = cellsDf.select(col("area"),
-        Glmm.xBetaCol(params.beta, featureCols).as("xb"),
-        col("m").cast("double").as("m"),
-        col("sumY").cast("double").as("sy"))
-    laplaceCore(base0, cellsDf.storageLevel != StorageLevel.NONE,
-      params.sigmaSq, vBound, warmStart)
+  private[graft] def laplaceGradInfo(d: CellDesign, params: Params,
+                                     v: Array[Double]): (Array[Double], Array[Double]) = {
+    val b = params.beta.toArray
+    val k = b.length
+    val sums = d.aggregate(new Array[Double](2 * v.length))({ (acc, c) =>
+      var eta = 0.0
+      var i = 0
+      while (i < k) { eta += b(i) * c.x(i); i += 1 }
+      val p = Glmm.sigmoidD(eta + v(c.area))
+      acc(2 * c.area) += c.sumY - c.m * p
+      acc(2 * c.area + 1) += c.m * p * (1.0 - p)
+      acc
+    }, CellDesign.addInto)
+    (Array.tabulate(v.length)(a => sums(2 * a) - v(a) / params.sigmaSq),
+      Array.tabulate(v.length)(a => sums(2 * a + 1) + 1.0 / params.sigmaSq))
   }
 
-  private def laplaceCore(base0: DataFrame, upstreamCached: Boolean,
-                          sigmaSq: Double, vBound: Double,
-                          warmStart: Map[String, Double]): Seq[AreaMode] = {
-    val spark = base0.sparkSession
-    // If the caller already persisted its slice (fit() does, once per
-    // fit), DON'T persist the xb projection: xb depends on this
-    // iteration's beta, so persisting here would re-write the data
-    // once per EM iteration — k full materializations instead of one.
-    // Recomputing xb per Newton pass from the cached slice is a few
-    // multiplies per row, far cheaper than an iteration-wise persist
-    // at scale.
-    val base =
-      if (upstreamCached) base0
-      else base0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val areas = base.select("area").distinct()
-        .collect().map(_.getString(0)).sorted
-      // per-area optimizer state: current v and a (lo, hi) bracket with
-      // g'(lo) > 0 > g'(hi) once the signs have been observed
-      var v = areas.map(a =>
-        a -> math.max(-vBound, math.min(vBound,
-          warmStart.getOrElse(a, 0.0)))).toMap
-      var lo = areas.map(_ -> -vBound).toMap
-      var hi = areas.map(_ -> vBound).toMap
-      var open = areas.toSet
-      var out = Map.empty[String, AreaMode]
-      // last observed (tau, n) per area: the pass-cap fallback must
-      // carry the REAL count and curvature — an n=0 sentinel would
-      // silently corrupt fit()'s nByArea weighting and totalN
-      var last = Map.empty[String, (Double, Long)]
-      val vSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("area",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType)))
-      var pass = 0
-      while (open.nonEmpty && pass < 40) {
-        val vRows = open.toSeq.sorted
-          .map(a => org.apache.spark.sql.Row(a, v(a)))
-        val vDf = spark.createDataFrame(
-          java.util.Arrays.asList(vRows: _*), vSchema)
-        val stats = base.join(broadcast(vDf), Seq("area"))
-          .select(col("area"), col("m"), col("sy"),
-            graft.etl.Encodings.sigmoid(col("xb") + col("v")).as("p"))
-          .groupBy("area")
-          .agg(sum(col("sy") - col("m") * col("p")).as("gsum"),
-            sum(col("m") * col("p") * (lit(1.0) - col("p"))).as("wsum"),
-            sum(col("m")).cast("long").as("n"))
-          .collect()
-        stats.foreach { r =>
-          val (a, gsum, wsum, n) =
-            (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3))
-          val va = v(a)
-          val g = gsum - va / sigmaSq        // g'(va)
-          val info = wsum + 1.0 / sigmaSq    // -g''(va) > 0
-          val tau = math.sqrt(1.0 / info)
-          last += a -> (tau, n)
-          if (g > 0) lo += a -> math.max(lo(a), va)
-          else hi += a -> math.min(hi(a), va)
-          val step = g / info
-          val atBound = (va >= vBound && g > 0) || (va <= -vBound && g < 0)
+  /** Laplace modes over a design. log g is strictly concave, so the
+    * mode is the unique root of g'(v), found by a safeguarded Newton
+    * (bisection fallback keeps a bracket, since g' is strictly
+    * decreasing). Each pass is one [[laplaceGradInfo]] for every area;
+    * an area stops moving once its step, its bracket or the bound says
+    * it has converged.
+    */
+  private[graft] def laplace(d: CellDesign, params: Params, vBound: Double,
+                             warmStart: Map[String, Double]): Seq[AreaMode] = {
+    val nA = d.areas.length
+    val v = d.areas.map(a =>
+      math.max(-vBound, math.min(vBound, warmStart.getOrElse(a, 0.0))))
+    val lo = Array.fill(nA)(-vBound)
+    val hi = Array.fill(nA)(vBound)
+    val tau = new Array[Double](nA)
+    val open = Array.fill(nA)(true)
+    var nOpen = nA
+    var pass = 0
+    while (nOpen > 0 && pass < 40) {
+      val (g, info) = laplaceGradInfo(d, params, v)
+      var a = 0
+      while (a < nA) {
+        if (open(a)) {
+          tau(a) = math.sqrt(1.0 / info(a))
+          if (g(a) > 0) lo(a) = math.max(lo(a), v(a))
+          else hi(a) = math.min(hi(a), v(a))
+          val step = g(a) / info(a)
+          val atBound = (v(a) >= vBound && g(a) > 0) || (v(a) <= -vBound && g(a) < 0)
           if (math.abs(step) < 1e-10 || hi(a) - lo(a) < 1e-12 || atBound) {
-            out += a -> AreaMode(a, va, tau, n)
-            open -= a
+            open(a) = false
+            nOpen -= 1
           } else {
-            var cand = va + step
+            var cand = v(a) + step
             if (cand <= lo(a) || cand >= hi(a)) cand = (lo(a) + hi(a)) / 2
-            v += a -> math.max(-vBound, math.min(vBound, cand))
+            v(a) = math.max(-vBound, math.min(vBound, cand))
           }
         }
-        pass += 1
+        a += 1
       }
-      // pass cap hit (should not happen for a concave objective): emit
-      // the best bracketed value with the area's real curvature and
-      // count from its final stats pass, and say so out loud
-      open.foreach { a =>
-        val (tau, n) = last.getOrElse(a, (math.sqrt(sigmaSq), 0L))
-        System.err.println(
-          s"[graft.Em] laplaceModes: area '$a' hit the pass cap without " +
-            s"converging (v=${v(a)}, bracket=[${lo(a)}, ${hi(a)}]); " +
-            "emitting best bracketed value")
-        out += a -> AreaMode(a, v(a), tau, n)
-      }
-      areas.map(out).toSeq
-    } finally if (!upstreamCached) base.unpersist(blocking = false)
+      pass += 1
+    }
+    // pass cap hit (should not happen for a concave objective): emit
+    // the best bracketed value with the curvature of its last pass,
+    // and say so out loud
+    (0 until nA).filter(open).foreach { a =>
+      System.err.println(
+        s"[graft.Em] laplace: area '${d.areas(a)}' hit the pass cap without " +
+          s"converging (v=${v(a)}, bracket=[${lo(a)}, ${hi(a)}]); " +
+          "emitting best bracketed value")
+    }
+    (0 until nA).map(a => AreaMode(d.areas(a), v(a), tau(a), d.nByArea(a)))
   }
 
-  /** Step 3 — v-tilde draws, keyed RNG: stream seeded by
+  /** Step 2 — v-tilde draws, keyed RNG: stream seeded by
     * (seed, iteration, area) so results are invariant to partitioning
     * and iteration order (SURVEY.md Q4 corrected semantics).
     */
@@ -212,7 +141,7 @@ object Em {
       m.area -> Array.fill(numDraws)(m.vhat + m.tau * rng.nextGaussian())
     }.toMap
 
-  /** Step 4a — closed-form maximizer of the adjusted-likelihood
+  /** Step 3a — closed-form maximizer of the adjusted-likelihood
     * Q(sigma^2) = log s2 - (n/2) log s2 - mean_r(sum_i n_i v_ir^2)/(2 s2)
     * (Method_code.Rmd:301-310; SURVEY.md Q2): s2 = S/(n-2),
     * S = mean over draws of sum_i n_i v_ir^2.
@@ -229,257 +158,78 @@ object Em {
     math.max(s / numDraws / (totalN - 2.0), 1e-8)
   }
 
-  /** Step 4b — beta update: minimize the MC-averaged NLL
-    *   h(beta) = sum_j [ (1/R) sum_r log1pexp(xb_j + v_{a(j),r}) - y_j xb_j ]
-    * (constant -sum_j y_j vbar_{a(j)} dropped; same argmin).
-    * One treeAggregate per L-BFGS evaluation; draws broadcast.
+  /** Step 3b objective — the MC-averaged NLL per row,
+    *   h(beta) = (1/n) sum_c [ m_c mean_r log1pexp(eta_c + v_{a(c),r}) - sumY_c eta_c ]
+    * (constant -sum_j y_j vbar_{a(j)} dropped; same argmin), and its
+    * gradient (1/n) sum_c (m_c mean_r sigmoid(eta_c + v_r) - sumY_c) x_c.
+    * `draws(a)` are the draws of `d.areas(a)`. The 1/n scale keeps
+    * L-BFGS line searches the same at any data size.
     */
-  def updateBeta(data: RDD[(Double, Array[Double], String)],
-                 draws: Map[String, Array[Double]],
-                 init: DenseVector[Double], maxIter: Int = 50): DenseVector[Double] = {
-    val sc = data.sparkContext
-    val bc = sc.broadcast(draws)
-    val scale = 1.0 / math.max(1L, data.count()).toDouble
-    try {
-      Optimize.lbfgsMin({ beta =>
-        val k = beta.length
-        val b = beta.toArray
-        val (loss, grad) = data.treeAggregate((0.0, new Array[Double](k)))(
-          seqOp = { case ((l, g), (y, x, area)) =>
-            var eta = 0.0
-            var i = 0
-            while (i < k) { eta += b(i) * x(i); i += 1 }
-            val vs = bc.value.getOrElse(area, Array(0.0))
-            var sumLog = 0.0; var sumP = 0.0
-            var r = 0
-            while (r < vs.length) {
-              sumLog += Glmm.log1pExp(eta + vs(r))
-              sumP += Glmm.sigmoidD(eta + vs(r))
-              r += 1
-            }
-            val mLog = sumLog / vs.length
-            val mP = sumP / vs.length
-            i = 0
-            while (i < k) { g(i) += (mP - y) * x(i); i += 1 }
-            (l + mLog - y * eta, g)
-          },
-          combOp = { case ((l1, g1), (l2, g2)) =>
-            var i = 0
-            while (i < k) { g1(i) += g2(i); i += 1 }
-            (l1 + l2, g1)
-          },
-          depth = 2)
-        (loss * scale, DenseVector(grad) * scale)
-      }, init, maxIter)
-    } finally bc.destroy()
-  }
-
-  /** [[updateBeta]] over weighted cells (m, sumY, x, area): the
-    * per-cell contribution is m * mean_r log1pexp(eta + v_r) - sumY * eta
-    * with gradient (m * mean_r sigmoid(eta + v_r) - sumY) x — the exact
-    * collapse of the unit-level sums. `totalN` (= sum of m) scales the
-    * objective to per-unit units so L-BFGS line searches behave
-    * identically to the uncompressed fit.
-    */
-  def updateBetaCells(cells: RDD[(Double, Double, Array[Double], String)],
-                      draws: Map[String, Array[Double]], totalN: Long,
-                      init: DenseVector[Double],
-                      maxIter: Int = 50): DenseVector[Double] = {
-    val sc = cells.sparkContext
-    val bc = sc.broadcast(draws)
-    val scale = 1.0 / math.max(1L, totalN).toDouble
-    try {
-      Optimize.lbfgsMin({ beta =>
-        val k = beta.length
-        val b = beta.toArray
-        val (loss, grad) = cells.treeAggregate((0.0, new Array[Double](k)))(
-          seqOp = { case ((l, g), (m, sy, x, area)) =>
-            var eta = 0.0
-            var i = 0
-            while (i < k) { eta += b(i) * x(i); i += 1 }
-            val vs = bc.value.getOrElse(area, Array(0.0))
-            var sumLog = 0.0; var sumP = 0.0
-            var r = 0
-            while (r < vs.length) {
-              sumLog += Glmm.log1pExp(eta + vs(r))
-              sumP += Glmm.sigmoidD(eta + vs(r))
-              r += 1
-            }
-            val mLog = sumLog / vs.length
-            val mP = sumP / vs.length
-            i = 0
-            while (i < k) { g(i) += (m * mP - sy) * x(i); i += 1 }
-            (l + m * mLog - sy * eta, g)
-          },
-          combOp = { case ((l1, g1), (l2, g2)) =>
-            var i = 0
-            while (i < k) { g1(i) += g2(i); i += 1 }
-            (l1 + l2, g1)
-          },
-          depth = 2)
-        (loss * scale, DenseVector(grad) * scale)
-      }, init, maxIter)
-    } finally bc.destroy()
-  }
-
-  // ---------------------------------------------------------------
-  // Sufficient-statistics compression (see [[Cell]])
-  // ---------------------------------------------------------------
-
-  /** Compress a design to its distinct-covariate cell table:
-    * groupBy(area, features) -> (m = count, sumY = sum y). ONE
-    * map-side-combining shuffle whose output is bounded by the
-    * covariate-cell cardinality, not the row count.
-    */
-  def compressCells(df: DataFrame, yCol: String, featureCols: Seq[String],
-                    areaCol: String): DataFrame =
-    df.groupBy((col(areaCol).cast("string").as("area") +:
-        featureCols.map(c => col(c).cast("double").as(c))): _*)
-      .agg(count(lit(1)).as("m"),
-        sum(col(yCol).cast("double")).as("sumY"))
-
-  /** Collect a cell table to the driver iff it has at most `maxLocal`
-    * cells; rows are sorted deterministically (area, then covariates)
-    * so driver-side float sums are invariant to partitioning and
-    * collect order. None = too many cells, stay distributed.
-    */
-  def collectCellsIfSmall(cellsDf: DataFrame, numFeatures: Int,
-                          maxLocal: Int): Option[Array[Cell]] = {
-    val rows = cellsDf.limit(maxLocal + 1).collect()
-    if (rows.length > maxLocal) None
-    else {
-      import scala.math.Ordering.Implicits._
-      Some(rows.map { r =>
-        val x = new Array[Double](numFeatures + 1)
-        x(0) = 1.0
-        var i = 0
-        while (i < numFeatures) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-        Cell(r.getString(0), x, r.getLong(numFeatures + 1),
-          r.getDouble(numFeatures + 2))
-      }.sortBy(c => (c.area, c.x.toSeq)))
-    }
-  }
-
-  /** Driver-local Laplace modes over collected cells — the same
-    * safeguarded Newton as [[laplaceModes]], but each pass is a loop
-    * over the area's cells instead of a grouped aggregation. Exact to
-    * float-noise vs the distributed path (same update rule, same
-    * termination).
-    */
-  private[stats] def laplaceModesLocal(
-      byArea: Array[(String, Array[Cell])], params: Params,
-      vBound: Double, warmStart: Map[String, Double]): Seq[AreaMode] = {
-    val sigmaSq = params.sigmaSq
-    val b = params.beta.toArray
-    byArea.toSeq.map { case (area, cs) =>
-      val xb = cs.map { c =>
-        var e = 0.0
-        var i = 0
-        while (i < b.length) { e += b(i) * c.x(i); i += 1 }
-        e
+  private[graft] def betaObjective(d: CellDesign, draws: Array[Array[Double]],
+                                   beta: DenseVector[Double]): (Double, DenseVector[Double]) = {
+    val k = beta.length
+    val b = beta.toArray
+    // [grad_0 .. grad_{k-1}, loss]
+    val acc = d.aggregate(new Array[Double](k + 1))({ (acc, c) =>
+      var eta = 0.0
+      var i = 0
+      while (i < k) { eta += b(i) * c.x(i); i += 1 }
+      val vs = draws(c.area)
+      var sumLog = 0.0; var sumP = 0.0
+      var r = 0
+      while (r < vs.length) {
+        sumLog += Glmm.log1pExp(eta + vs(r))
+        sumP += Glmm.sigmoidD(eta + vs(r))
+        r += 1
       }
-      val n = cs.map(_.m).sum
-      var v = math.max(-vBound, math.min(vBound,
-        warmStart.getOrElse(area, 0.0)))
-      var lo = -vBound
-      var hi = vBound
-      var tau = math.sqrt(sigmaSq)
-      var pass = 0
-      var done = false
-      while (!done && pass < 40) {
-        var gsum = 0.0; var wsum = 0.0
-        var i = 0
-        while (i < cs.length) {
-          val p = Glmm.sigmoidD(xb(i) + v)
-          gsum += cs(i).sumY - cs(i).m * p
-          wsum += cs(i).m * p * (1.0 - p)
-          i += 1
-        }
-        val g = gsum - v / sigmaSq
-        val info = wsum + 1.0 / sigmaSq
-        tau = math.sqrt(1.0 / info)
-        if (g > 0) lo = math.max(lo, v) else hi = math.min(hi, v)
-        val step = g / info
-        val atBound = (v >= vBound && g > 0) || (v <= -vBound && g < 0)
-        if (math.abs(step) < 1e-10 || hi - lo < 1e-12 || atBound) done = true
-        else {
-          var cand = v + step
-          if (cand <= lo || cand >= hi) cand = (lo + hi) / 2
-          v = math.max(-vBound, math.min(vBound, cand))
-          pass += 1
-        }
-      }
-      if (!done) System.err.println(
-        s"[graft.Em] laplaceModesLocal: area '$area' hit the pass cap " +
-          s"without converging (v=$v, bracket=[$lo, $hi]); " +
-          "emitting best bracketed value")
-      AreaMode(area, v, tau, n)
-    }
+      val mLog = sumLog / vs.length
+      val mP = sumP / vs.length
+      acc(k) += c.m * mLog - c.sumY * eta
+      i = 0
+      while (i < k) { acc(i) += (c.m * mP - c.sumY) * c.x(i); i += 1 }
+      acc
+    }, CellDesign.addInto)
+    val scale = 1.0 / d.totalN
+    (acc(k) * scale, DenseVector(acc.take(k)) * scale)
   }
 
-  /** Driver-local beta update over collected cells — same objective as
-    * [[updateBetaCells]] without a cluster round-trip per L-BFGS
-    * evaluation.
+  /** Outer EM loop (Method_code.Rmd:352-390): iterate to convergence,
+    * tol on sigma and on every beta coordinate (reference tol = 0.01).
+    *
+    * The design is first collapsed to its [[CellDesign]] (one shuffle).
+    * A categorical design is dimension-sized and the whole loop then
+    * runs on the driver; a table too large for the driver stays
+    * distributed, and every Newton pass and L-BFGS evaluation becomes
+    * one `treeAggregate` over the cached cells. Fails on fewer than
+    * three rows, where the sigma^2 update has no finite value.
     */
-  private[stats] def updateBetaLocal(cells: Array[Cell],
-                                     draws: Map[String, Array[Double]],
-                                     totalN: Long,
-                                     init: DenseVector[Double],
-                                     maxIter: Int = 50): DenseVector[Double] = {
-    val scale = 1.0 / math.max(1L, totalN).toDouble
-    Optimize.lbfgsMin({ beta =>
-      val k = beta.length
-      val b = beta.toArray
-      var loss = 0.0
-      val grad = new Array[Double](k)
-      var ci = 0
-      while (ci < cells.length) {
-        val c = cells(ci)
-        var eta = 0.0
-        var i = 0
-        while (i < k) { eta += b(i) * c.x(i); i += 1 }
-        val vs = draws.getOrElse(c.area, Array(0.0))
-        var sumLog = 0.0; var sumP = 0.0
-        var r = 0
-        while (r < vs.length) {
-          sumLog += Glmm.log1pExp(eta + vs(r))
-          sumP += Glmm.sigmoidD(eta + vs(r))
-          r += 1
-        }
-        val mLog = sumLog / vs.length
-        val mP = sumP / vs.length
-        loss += c.m * mLog - c.sumY * eta
-        i = 0
-        while (i < k) { grad(i) += (c.m * mP - c.sumY) * c.x(i); i += 1 }
-        ci += 1
-      }
-      (loss * scale, DenseVector(grad) * scale)
-    }, init, maxIter)
-  }
+  def fit(df: DataFrame, yCol: String, featureCols: Seq[String],
+          areaCol: String, init: Params, numDraws: Int = 1000,
+          tol: Double = 0.01, maxIter: Int = 50, seed: Long = 42L,
+          vBound: Double = 3.0): Fit =
+    CellDesign.using(df, yCol, featureCols, col(areaCol))(
+      fitDesign(_, init, numDraws, tol, maxIter, seed, vBound))
 
-  /** The whole EM loop over driver-local cells: zero cluster work after
-    * the one compression shuffle. Identical update rules to the
-    * distributed loop (draws use the same keyed RNG, so given the same
-    * modes the draw streams are bit-identical).
-    */
-  private def fitLocal(cells: Array[Cell], init: Params, numDraws: Int,
-                       tol: Double, maxIter: Int, seed: Long,
-                       vBound: Double): Fit = {
-    val byArea: Array[(String, Array[Cell])] =
-      cells.groupBy(_.area).toArray.sortBy(_._1)
-    val nByArea = byArea.map { case (a, cs) => a -> cs.map(_.m).sum }.toMap
-    val totalN = nByArea.valuesIterator.sum
+  /** [[fit]] over an already-built design. */
+  private[graft] def fitDesign(d: CellDesign, init: Params, numDraws: Int,
+                               tol: Double, maxIter: Int, seed: Long,
+                               vBound: Double): Fit = {
+    val nByArea = d.areas.zip(d.nByArea).toMap
     var params = init
     var modes: Seq[AreaMode] = Nil
     var draws: Map[String, Array[Double]] = Map.empty
     var k = 0
     var converged = false
     while (k < maxIter && !converged) {
-      modes = laplaceModesLocal(byArea, params, vBound,
+      // warm-start each area's root-find from the previous iteration's
+      // mode (beta moves little between EM steps -> ~2 fewer passes)
+      modes = laplace(d, params, vBound,
         warmStart = modes.map(m => m.area -> m.vhat).toMap)
       draws = simulateDraws(modes, numDraws, seed, k)
-      val s2 = updateSigmaSq(draws, nByArea, totalN)
-      val beta = updateBetaLocal(cells, draws, totalN, params.beta)
+      val s2 = updateSigmaSq(draws, nByArea, d.totalN)
+      // Step 3b — beta by driver L-BFGS over the cells
+      val beta = Optimize.lbfgsMin(betaObjective(d, d.areas.map(draws), _),
+        params.beta, 50)
       val dSigma = math.abs(math.sqrt(s2) - math.sqrt(params.sigmaSq))
       val dBeta = breeze.linalg.max(breeze.numerics.abs(beta - params.beta))
       converged = dSigma < tol && dBeta < tol
@@ -489,138 +239,13 @@ object Em {
     Fit(params, modes, draws, k, converged)
   }
 
-  /** Outer EM loop (Method_code.Rmd:352-390): iterate to convergence,
-    * tol on sigma and on every beta coordinate (reference tol = 0.01).
-    *
-    * With `compress = true` (default) the design is first collapsed to
-    * its [[Cell]] sufficient-statistics table (one shuffle). If the
-    * cell table fits the `maxLocalCells` bound it is collected —
-    * DIMENSION-sized for categorical designs, like the area list the
-    * loop already collects — and the whole EM runs driver-side with
-    * zero further cluster work; otherwise the loop stays distributed
-    * over the (still compressed) weighted cells. Pass
-    * `compress = false` for designs with continuous covariates, where
-    * the groupBy would shuffle the full data for no reduction — the
-    * loop then runs the historical unit-level path.
+  /** Compress a design to its distinct-covariate cell table:
+    * groupBy(area, features) -> (m = count, sumY = sum y); see
+    * [[CellDesign.compress]].
     */
-  def fit(df: DataFrame, yCol: String, featureCols: Seq[String],
-          areaCol: String, init: Params, numDraws: Int = 1000,
-          tol: Double = 0.01, maxIter: Int = 50, seed: Long = 42L,
-          vBound: Double = 3.0, compress: Boolean = true,
-          maxLocalCells: Int = 1 << 16): Fit =
-    if (compress) {
-      val cellsDf = compressCells(df, yCol, featureCols, areaCol)
-      collectCellsIfSmall(cellsDf, featureCols.length, maxLocalCells) match {
-        case Some(cells) =>
-          fitLocal(cells, init, numDraws, tol, maxIter, seed, vBound)
-        case None =>
-          fitCellsDistributed(cellsDf, featureCols, init, numDraws, tol,
-            maxIter, seed, vBound)
-      }
-    } else fitUnits(df, yCol, featureCols, areaCol, init, numDraws, tol,
-      maxIter, seed, vBound)
-
-  /** The distributed loop over a compressed-but-large cell table:
-    * every Newton pass and L-BFGS evaluation aggregates weighted cells
-    * (bounded by cell cardinality), never unit rows.
-    */
-  private def fitCellsDistributed(cellsDf0: DataFrame,
-      featureCols: Seq[String], init: Params, numDraws: Int, tol: Double,
-      maxIter: Int, seed: Long, vBound: Double): Fit = {
-    val nf = featureCols.length
-    val cellsDf = cellsDf0.persist(StorageLevel.MEMORY_AND_DISK)
-    val design = cellsDf.select(
-        (col("m").cast("double") +: col("sumY").cast("double") +:
-          featureCols.map(c => col(c).cast("double"))) :+ col("area"): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](nf + 1)
-        x(0) = 1.0
-        var i = 0
-        while (i < nf) { x(i + 1) = r.getDouble(i + 2); i += 1 }
-        (r.getDouble(0), r.getDouble(1), x, r.getString(nf + 2))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    design.count()
-    try {
-      var params = init
-      var modes: Seq[AreaMode] = Nil
-      var draws: Map[String, Array[Double]] = Map.empty
-      var k = 0
-      var converged = false
-      var totalN = 0L
-      while (k < maxIter && !converged) {
-        modes = laplaceModesCells(cellsDf, params, featureCols, vBound,
-          warmStart = modes.map(m => m.area -> m.vhat).toMap)
-        if (totalN == 0L) totalN = modes.map(_.n).sum
-        draws = simulateDraws(modes, numDraws, seed, k)
-        val nByArea = modes.map(m => m.area -> m.n).toMap
-        val s2 = updateSigmaSq(draws, nByArea, totalN)
-        val beta = updateBetaCells(design, draws, totalN, params.beta)
-        val dSigma = math.abs(math.sqrt(s2) - math.sqrt(params.sigmaSq))
-        val dBeta = breeze.linalg.max(breeze.numerics.abs(beta - params.beta))
-        converged = dSigma < tol && dBeta < tol
-        params = Params(beta, s2)
-        k += 1
-      }
-      Fit(params, modes, draws, k, converged)
-    } finally {
-      design.unpersist(blocking = false)
-      cellsDf.unpersist(blocking = false)
-    }
-  }
-
-  /** The historical unit-level distributed loop (`compress = false`). */
-  private def fitUnits(df: DataFrame, yCol: String, featureCols: Seq[String],
-          areaCol: String, init: Params, numDraws: Int,
-          tol: Double, maxIter: Int, seed: Long,
-          vBound: Double): Fit = {
-    // the (area, features, y) slice is iteration-INVARIANT: persist it
-    // once here and let every laplaceModes pass project x'beta from the
-    // cached slice, instead of re-persisting a beta-dependent
-    // projection per EM iteration (k source re-reads at scale)
-    val slim = df.select(
-        (col(areaCol) +: featureCols.map(col)) :+ col(yCol): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val design = slim.select(
-        (col(yCol).cast("double") +: featureCols.map(c => col(c).cast("double"))) :+
-          col(areaCol).cast("string"): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](featureCols.length + 1)
-        x(0) = 1.0
-        var i = 0
-        while (i < featureCols.length) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-        (r.getDouble(0), x, r.getString(featureCols.length + 1))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    design.count() // materialize once; reused by every objective call
-
-    try {
-      var params = init
-      var modes: Seq[AreaMode] = Nil
-      var draws: Map[String, Array[Double]] = Map.empty
-      var k = 0
-      var converged = false
-      var totalN = 0L
-      while (k < maxIter && !converged) {
-        // warm-start each area's root-find from the previous iteration's
-        // mode (beta moves little between EM steps -> ~2 fewer passes)
-        modes = laplaceModes(slim, params, featureCols, areaCol, yCol, vBound,
-          warmStart = modes.map(m => m.area -> m.vhat).toMap)
-        if (totalN == 0L) totalN = modes.map(_.n).sum
-        draws = simulateDraws(modes, numDraws, seed, k)
-        val nByArea = modes.map(m => m.area -> m.n).toMap
-        val s2 = updateSigmaSq(draws, nByArea, totalN)
-        val beta = updateBeta(design, draws, params.beta)
-        val dSigma = math.abs(math.sqrt(s2) - math.sqrt(params.sigmaSq))
-        val dBeta = breeze.linalg.max(breeze.numerics.abs(beta - params.beta))
-        converged = dSigma < tol && dBeta < tol
-        params = Params(beta, s2)
-        k += 1
-      }
-      Fit(params, modes, draws, k, converged)
-    } finally {
-      design.unpersist(blocking = false)
-      slim.unpersist(blocking = false)
-    }
-  }
+  def compressCells(df: DataFrame, yCol: String, featureCols: Seq[String],
+                    areaCol: String): DataFrame =
+    CellDesign.compress(df, yCol, featureCols, col(areaCol))
 
   /** EBP per-area estimates (Method_code.Rmd:406-454): for each unit of
     * the big survey, posterior-mean probability = mean over the first

@@ -1,10 +1,8 @@
 package graft.stats
 
 import breeze.linalg.DenseVector
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.etl.Encodings
 
@@ -13,11 +11,11 @@ import graft.etl.Encodings
   * `Method_code.Rmd:68-81,171-181`).
   *
   * The fixed-effects fit minimizes the logistic NLL with Breeze L-BFGS
-  * on the driver; each objective evaluation is one `treeAggregate` over
-  * a cached `RDD[(y, x)]` — the classic Spark pattern (mllib's own
-  * LogisticRegression does the same dance). This scales to arbitrarily
-  * many rows: per-evaluation cost is one pass, communication is
-  * O(numFeatures * log(numPartitions)) via the tree reduction, and no
+  * on the driver over the data's [[CellDesign]]: each objective
+  * evaluation is one design `aggregate` — a driver loop over a
+  * dimension-sized cell table, or a `treeAggregate` over cached cells
+  * when the table is large (the mllib LogisticRegression pattern), so
+  * communication stays O(numFeatures * log(numPartitions)) and no
   * per-row data ever reaches the driver.
   *
   * The random-intercept SD is NOT estimated here — per the paper, the
@@ -34,51 +32,30 @@ object Glmm {
   def sigmoidD(x: Double): Double =
     if (x >= 0) 1.0 / (1.0 + math.exp(-x)) else { val e = math.exp(x); e / (1.0 + e) }
 
-  /** Project a DataFrame to a cached design RDD: y plus [1, x1..xk]
-    * (intercept prepended). Columns are cast to double once here so the
-    * hot optimizer loop does no conversion.
+  /** (NLL, gradient) of logistic regression over a cell design, per
+    * row: (1/n) sum_c [ m_c log1pexp(eta_c) - sumY_c eta_c ], gradient
+    * (1/n) sum_c (m_c sigmoid(eta_c) - sumY_c) x_c; optional L2 ridge
+    * for separation robustness. The 1/n scale keeps L-BFGS line
+    * searches the same at any data size.
     */
-  def designRdd(df: DataFrame, yCol: String,
-                featureCols: Seq[String]): RDD[(Double, Array[Double])] = {
-    val cols = (col(yCol).cast("double") +:
-      featureCols.map(c => col(c).cast("double"))).toArray
-    df.select(cols.toIndexedSeq: _*).rdd.map { r =>
-      val x = new Array[Double](featureCols.length + 1)
-      x(0) = 1.0
-      var i = 0
-      while (i < featureCols.length) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-      (r.getDouble(0), x)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** (NLL, gradient) of logistic regression over the design RDD in one
-    * tree-aggregated pass; optional L2 ridge for separation robustness.
-    * `scale` (typically 1/n) conditions the objective so L-BFGS line
-    * searches behave identically at any data size.
-    */
-  def nllGrad(data: RDD[(Double, Array[Double])], beta: DenseVector[Double],
-              l2: Double = 0.0,
-              scale: Double = 1.0): (Double, DenseVector[Double]) = {
+  private[graft] def nll(d: CellDesign, beta: DenseVector[Double],
+                         l2: Double): (Double, DenseVector[Double]) = {
     val k = beta.length
     val b = beta.toArray
-    val (loss, grad) = data.treeAggregate((0.0, new Array[Double](k)))(
-      seqOp = { case ((l, g), (y, x)) =>
-        var eta = 0.0
-        var i = 0
-        while (i < k) { eta += b(i) * x(i); i += 1 }
-        val p = sigmoidD(eta)
-        i = 0
-        while (i < k) { g(i) += (p - y) * x(i); i += 1 }
-        (l + log1pExp(eta) - y * eta, g)
-      },
-      combOp = { case ((l1, g1), (l2v, g2)) =>
-        var i = 0
-        while (i < k) { g1(i) += g2(i); i += 1 }
-        (l1 + l2v, g1)
-      },
-      depth = 2)
-    val gv = DenseVector(grad) * scale
-    val sLoss = loss * scale
+    // [grad_0 .. grad_{k-1}, loss]
+    val acc = d.aggregate(new Array[Double](k + 1))({ (acc, c) =>
+      var eta = 0.0
+      var i = 0
+      while (i < k) { eta += b(i) * c.x(i); i += 1 }
+      val p = sigmoidD(eta)
+      acc(k) += c.m * log1pExp(eta) - c.sumY * eta
+      i = 0
+      while (i < k) { acc(i) += (c.m * p - c.sumY) * c.x(i); i += 1 }
+      acc
+    }, CellDesign.addInto)
+    val scale = 1.0 / d.totalN
+    val gv = DenseVector(acc.take(k)) * scale
+    val sLoss = acc(k) * scale
     if (l2 > 0) (sLoss + 0.5 * l2 * (beta dot beta), gv + beta * l2)
     else (sLoss, gv)
   }
@@ -86,73 +63,21 @@ object Glmm {
   /** Fit fixed-effects logistic regression; returns beta with intercept
     * at index 0 (feature order = featureCols).
     *
-    * With `compress = true` (default) the design is first collapsed to
-    * its distinct-covariate cells — (x, m = count, sumY = sum y), one
-    * map-side-combining shuffle; see [[graft.stats.Em.Cell]] — and,
-    * when the cell table fits `maxLocalCells`, the entire L-BFGS runs
-    * driver-side over the weighted cells: exact (y enters the NLL
-    * linearly) and, for categorical designs, independent of row count.
-    * Pass `compress = false` for continuous covariates.
+    * The design is collapsed to its distinct-covariate cells with one
+    * constant area ([[CellDesign]]: one map-side-combining shuffle),
+    * and L-BFGS runs over the weighted cells — exact, since y enters
+    * the NLL linearly. A categorical design has few cells whatever the
+    * row count and is fitted on the driver; a larger table (continuous
+    * covariates) is fitted by `treeAggregate` over the cached cells.
     */
   def fitLogistic(df: DataFrame, yCol: String, featureCols: Seq[String],
-                  l2: Double = 1e-8, maxIter: Int = 100,
-                  compress: Boolean = true,
-                  maxLocalCells: Int = 1 << 16): DenseVector[Double] = {
-    val init = DenseVector.zeros[Double](featureCols.length + 1)
-    val localCells: Option[Array[(Array[Double], Double, Double)]] =
-      if (compress) {
-        val cellsDf = df
-          .groupBy(featureCols.map(c => col(c).cast("double").as(c)): _*)
-          .agg(count(lit(1)).cast("double").as("m"),
-            sum(col(yCol).cast("double")).as("sumY"))
-        val rows = cellsDf.limit(maxLocalCells + 1).collect()
-        if (rows.length > maxLocalCells) None
-        else {
-          import scala.math.Ordering.Implicits._
-          Some(rows.map { r =>
-            val x = new Array[Double](featureCols.length + 1)
-            x(0) = 1.0
-            var i = 0
-            while (i < featureCols.length) { x(i + 1) = r.getDouble(i); i += 1 }
-            (x, r.getDouble(featureCols.length),
-              r.getDouble(featureCols.length + 1))
-          }.sortBy(_._1.toSeq))
-        }
-      } else None
-    localCells match {
-      case Some(cells) =>
-        val totalN = cells.map(_._2).sum
-        val scale = 1.0 / math.max(1.0, totalN)
-        Optimize.lbfgsMin({ beta =>
-          val k = beta.length
-          val b = beta.toArray
-          var loss = 0.0
-          val grad = new Array[Double](k)
-          var ci = 0
-          while (ci < cells.length) {
-            val (x, m, sy) = cells(ci)
-            var eta = 0.0
-            var i = 0
-            while (i < k) { eta += b(i) * x(i); i += 1 }
-            val p = sigmoidD(eta)
-            loss += m * log1pExp(eta) - sy * eta
-            i = 0
-            while (i < k) { grad(i) += (m * p - sy) * x(i); i += 1 }
-            ci += 1
-          }
-          val gv = DenseVector(grad) * scale
-          val sLoss = loss * scale
-          if (l2 > 0) (sLoss + 0.5 * l2 * (beta dot beta), gv + beta * l2)
-          else (sLoss, gv)
-        }, init, maxIter)
-      case None =>
-        val data = designRdd(df, yCol, featureCols)
-        try {
-          val scale = 1.0 / math.max(1L, data.count()).toDouble
-          Optimize.lbfgsMin(nllGrad(data, _, l2, scale), init, maxIter)
-        } finally data.unpersist(blocking = false)
-    }
-  }
+                  l2: Double = 1e-8, maxIter: Int = 100): DenseVector[Double] =
+    CellDesign.using(df, yCol, featureCols, lit(""))(fitDesign(_, l2, maxIter))
+
+  /** [[fitLogistic]] over an already-built design. */
+  private[graft] def fitDesign(d: CellDesign, l2: Double,
+                               maxIter: Int): DenseVector[Double] =
+    Optimize.lbfgsMin(nll(d, _, l2), DenseVector.zeros[Double](d.k), maxIter)
 
   /** Linear-predictor Column from a fitted beta (intercept at index 0),
     * the Column-algebra mirror of the reference's `x_beta_func`

@@ -3,41 +3,17 @@ package graft.stats
 import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
 
-/** Driver-side numerical optimizers (SURVEY.md M10/M11).
+/** Driver-side numerical optimizer (SURVEY.md M10/M11).
   *
-  * Mirrors the reference's `optimize(f, lower, upper, maximum=TRUE)`
-  * (`Method_code.Rmd:262,308-310`) and `optimParallel` L-BFGS-B
-  * (`:33-35,337`). The reference parallelizes finite differences across
+  * Mirrors the reference's `optimParallel` L-BFGS-B
+  * (`Method_code.Rmd:33-35,337`); its 1-D `optimize` calls (`:262,
+  * 308-310`) are the EM's safeguarded Newton Laplace solver and the
+  * closed-form sigma^2 update. The reference parallelizes finite differences across
   * forked R workers; here parallelism lives *inside* the objective
   * (a Spark action per evaluation), so the optimizer itself is plain
   * driver code.
   */
 object Optimize {
-
-  /** 1-D bounded maximization by golden-section search. The objectives
-    * this serves (per-area Laplace log-likelihood, the sigma^2
-    * Q-function) are strictly concave, for which golden-section is
-    * globally convergent and deterministic.
-    */
-  def goldenMax(f: Double => Double, lo: Double, hi: Double,
-                tol: Double = 1e-9, maxIter: Int = 200): Double = {
-    val phi = (math.sqrt(5.0) - 1) / 2
-    var a = lo; var b = hi
-    var c = b - phi * (b - a); var d = a + phi * (b - a)
-    var fc = f(c); var fd = f(d)
-    var i = 0
-    while (b - a > tol && i < maxIter) {
-      if (fc > fd) { b = d; d = c; fd = fc; c = b - phi * (b - a); fc = f(c) }
-      else { a = c; c = d; fc = fd; d = a + phi * (b - a); fd = f(d) }
-      i += 1
-    }
-    (a + b) / 2
-  }
-
-  /** 1-D bounded minimization (negated golden-section). */
-  def goldenMin(f: Double => Double, lo: Double, hi: Double,
-                tol: Double = 1e-9): Double =
-    goldenMax(x => -f(x), lo, hi, tol)
 
   /** Unconstrained N-D minimization via Breeze L-BFGS. `fg` returns
     * (value, gradient); when the objective is a distributed NLL, each

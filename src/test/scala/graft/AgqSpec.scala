@@ -1,8 +1,9 @@
 package graft
 
 import breeze.linalg.DenseVector
+import org.apache.spark.sql.functions.col
 
-import graft.stats.{Agq, Em, Glmm}
+import graft.stats.{Agq, CellDesign, Em, Glmm}
 
 /** Adaptive Gauss-Hermite GLMM fit (SURVEY.md M1 — the glmer
   * counterpart): quadrature-rule exactness, gradient consistency via
@@ -120,19 +121,40 @@ class AgqSpec extends SparkSpec {
     assert(math.abs(a.sigma - b.sigma) < 1e-4)
   }
 
-  test("cell compression is exact: local-cells fit matches the " +
-      "unit-level distributed fit") {
+  test("local and distributed cell designs give the same AGQ fit") {
     val init = Em.Params(DenseVector(0.0, 0.5, -0.5), 0.25)
     val local = Agq.fit(survey, "y", SurveyFixture.featureCols, "state", init)
-    val units = Agq.fit(survey, "y", SurveyFixture.featureCols, "state", init,
-      compress = false)
+    val d = CellDesign.build(survey, "y", SurveyFixture.featureCols,
+      col("state"), maxLocal = 0)
+    val dist =
+      try {
+        assert(!d.isLocal)
+        Agq.fitDesign(d, init, numNodes = 9, tol = 1e-3, maxOuter = 15,
+          innerIter = 40)
+      } finally d.unpersist()
     // identical math, different float-summation order; both optimizers
     // re-converge to the same marginal-ML optimum
-    assert(breeze.linalg.max(breeze.numerics.abs(local.beta - units.beta)) < 1e-4,
-      s"local=${local.beta} units=${units.beta}")
-    assert(math.abs(local.sigma - units.sigma) < 1e-4)
-    local.ranef.zip(units.ranef).foreach { case ((a1, u1, s1), (a2, u2, s2)) =>
+    assert(breeze.linalg.max(breeze.numerics.abs(local.beta - dist.beta)) < 1e-4,
+      s"local=${local.beta} dist=${dist.beta}")
+    assert(math.abs(local.sigma - dist.sigma) < 1e-4)
+    local.ranef.zip(dist.ranef).foreach { case ((a1, u1, s1), (a2, u2, s2)) =>
       assert(a1 == a2 && math.abs(u1 - u2) < 1e-4 && math.abs(s1 - s2) < 1e-4)
+    }
+  }
+
+  test("node stats over local and distributed cells match a unit-level oracle") {
+    val units = UnitOracle.rows(survey, "y", SurveyFixture.featureCols, "state")
+    val beta = DenseVector(0.2, -0.3, 0.6)
+    Seq(1 << 16, 0).foreach { maxLocal =>
+      val d = CellDesign.build(survey, "y", SurveyFixture.featureCols,
+        col("state"), maxLocal)
+      try {
+        val nodes = d.areas.indices.map(a => Array(-0.5, 0.1 * a - 1.0, 0.7)).toArray
+        val (s, g) = Agq.nodeStats(d, nodes, beta.toArray)
+        val (ws, wg) = UnitOracle.nodeStats(units, d.areas.toSeq, nodes, beta)
+        s.zip(ws).foreach { case (x, y) => assert(UnitOracle.close(x, y), s"S $x vs $y") }
+        g.zip(wg).foreach { case (x, y) => assert(UnitOracle.close(x, y), s"G $x vs $y") }
+      } finally d.unpersist()
     }
   }
 

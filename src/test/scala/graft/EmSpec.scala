@@ -3,7 +3,7 @@ package graft
 import breeze.linalg.DenseVector
 import org.apache.spark.sql.functions._
 
-import graft.stats.{Bootstrap, Em, Glmm}
+import graft.stats.{Bootstrap, CellDesign, Em, Glmm}
 
 class EmSpec extends SparkSpec {
   import spark.implicits._
@@ -100,46 +100,102 @@ class EmSpec extends SparkSpec {
       ("a", 0.0, 1.0, 1), ("a", 0.0, 1.0, 0), ("a", 0.0, 1.0, 1),
       ("a", 1.0, 0.0, 0), ("b", 0.0, 0.0, 1), ("b", 0.0, 0.0, 1)
     ).toDF("state", "x1", "x2", "y")
-    def cells(p: Int) = Em.collectCellsIfSmall(
-      Em.compressCells(df.repartition(p), "y", Seq("x1", "x2"), "state"),
-      numFeatures = 2, maxLocal = 100).get
+    def design(p: Int, maxLocal: Int) = CellDesign.build(df.repartition(p),
+      "y", Seq("x1", "x2"), col("state"), maxLocal)
+    def cells(p: Int) = {
+      val d = design(p, maxLocal = 100)
+      assert(d.isLocal)
+      d.aggregate(Seq.empty[(String, Seq[Double], Double, Double)])(
+        (acc, c) => acc :+ ((d.areas(c.area), c.x.toSeq, c.m, c.sumY)), _ ++ _)
+    }
     val c1 = cells(1)
     val c13 = cells(13)
     assert(c1.length == 3)
-    // counts and 0/1 sums are exact integers — partitioning-exact
-    assert(c1.map(c => (c.area, c.x.toSeq, c.m, c.sumY)).toSeq ==
-      c13.map(c => (c.area, c.x.toSeq, c.m, c.sumY)).toSeq)
-    val cellA = c1.find(c => c.area == "a" && c.x.toSeq == Seq(1.0, 0.0, 1.0)).get
-    assert(cellA.m == 3 && cellA.sumY == 2.0)
-    // the bound is honored
-    assert(Em.collectCellsIfSmall(
-      Em.compressCells(df, "y", Seq("x1", "x2"), "state"), 2, maxLocal = 2)
-      .isEmpty)
+    assert(Em.compressCells(df, "y", Seq("x1", "x2"), "state").count() == 3)
+    // counts and 0/1 sums are exact integers — partitioning-exact, and
+    // the driver table is sorted, so the order matches too
+    assert(c1 == c13)
+    assert(c1.contains(("a", Seq(1.0, 0.0, 1.0), 3.0, 2.0)))
+    // the bound is honored: 3 cells > 2 stay distributed
+    val dist = design(4, maxLocal = 2)
+    try {
+      assert(!dist.isLocal)
+      assert(dist.areas.toSeq == Seq("a", "b") && dist.nByArea.toSeq == Seq(4L, 2L))
+    } finally dist.unpersist()
   }
 
-  test("cell compression is exact: local, distributed-cells, and " +
-      "unit-level fits agree") {
+  test("local and distributed cell designs give the same EM fit") {
     val init = Em.Params(DenseVector.zeros[Double](3), 1.0)
-    def run(compress: Boolean, maxLocal: Int) =
-      Em.fit(survey, "y", SurveyFixture.featureCols, "state", init,
-        numDraws = 100, maxIter = 3, seed = 5L, compress = compress,
-        maxLocalCells = maxLocal)
-    val local = run(compress = true, maxLocal = 1 << 16)
-    val distCells = run(compress = true, maxLocal = 0)
-    val units = run(compress = false, maxLocal = 1 << 16)
+    def run(maxLocal: Int) = {
+      val d = CellDesign.build(survey, "y", SurveyFixture.featureCols,
+        col("state"), maxLocal)
+      try {
+        assert(d.isLocal == (maxLocal > 0))
+        Em.fitDesign(d, init, numDraws = 100, tol = 0.01, maxIter = 3,
+          seed = 5L, vBound = 3.0)
+      } finally d.unpersist()
+    }
+    val local = run(1 << 16)
+    val dist = run(0)
     // identical math, different float-summation order: the optimizers
     // re-converge to the same point well within 1e-4
-    Seq(distCells, units).foreach { other =>
-      val dB = breeze.linalg.max(breeze.numerics.abs(
-        local.params.beta - other.params.beta))
-      assert(dB < 1e-4, s"beta ${local.params.beta} vs ${other.params.beta}")
-      assert(math.abs(local.params.sigmaSq - other.params.sigmaSq) < 1e-4)
-      assert(local.modes.map(_.area) == other.modes.map(_.area))
-      assert(local.modes.map(_.n) == other.modes.map(_.n))
-      local.modes.zip(other.modes).foreach { case (x, y) =>
-        assert(math.abs(x.vhat - y.vhat) < 1e-5, s"$x vs $y")
-      }
+    val dB = breeze.linalg.max(breeze.numerics.abs(
+      local.params.beta - dist.params.beta))
+    assert(dB < 1e-4, s"beta ${local.params.beta} vs ${dist.params.beta}")
+    assert(math.abs(local.params.sigmaSq - dist.params.sigmaSq) < 1e-4)
+    assert(local.modes.map(_.area) == dist.modes.map(_.area))
+    assert(local.modes.map(_.n) == dist.modes.map(_.n))
+    local.modes.zip(dist.modes).foreach { case (x, y) =>
+      assert(math.abs(x.vhat - y.vhat) < 1e-5, s"$x vs $y")
     }
+    // the public fit is the driver-local design
+    val viaFit = Em.fit(survey, "y", SurveyFixture.featureCols, "state", init,
+      numDraws = 100, maxIter = 3, seed = 5L)
+    assert(viaFit.params.beta == local.params.beta)
+  }
+
+  test("cell kernels match a unit-level oracle: Laplace g'(v) and " +
+      "curvature, beta objective and gradient") {
+    val units = UnitOracle.rows(survey, "y", SurveyFixture.featureCols, "state")
+    val params = Em.Params(DenseVector(0.2, -0.4, 0.7), 0.6)
+    Seq(1 << 16, 0).foreach { maxLocal =>
+      val d = CellDesign.build(survey, "y", SurveyFixture.featureCols,
+        col("state"), maxLocal)
+      try {
+        val v = d.areas.indices.map(a => 0.1 * a - 0.8).toArray
+        val (g, info) = Em.laplaceGradInfo(d, params, v)
+        val want = UnitOracle.laplace(units, params.beta, params.sigmaSq,
+          d.areas.zip(v).toMap)
+        d.areas.indices.foreach { a =>
+          val (wg, wi) = want(d.areas(a))
+          assert(UnitOracle.close(g(a), wg) && UnitOracle.close(info(a), wi),
+            s"${d.areas(a)}: g ${g(a)} vs $wg, info ${info(a)} vs $wi")
+        }
+        val draws = d.areas.indices.map(a =>
+          Array.tabulate(7)(r => 0.3 * r - 0.9 + 0.05 * a)).toArray
+        val (loss, grad) = Em.betaObjective(d, draws, params.beta)
+        val (wl, wgrad) = UnitOracle.betaObjective(units,
+          d.areas.zip(draws).toMap, params.beta)
+        assert(UnitOracle.close(loss, wl), s"loss $loss vs $wl")
+        grad.toArray.zip(wgrad.toArray).foreach { case (x, y) =>
+          assert(UnitOracle.close(x, y), s"grad $grad vs $wgrad") }
+      } finally d.unpersist()
+    }
+  }
+
+  test("fit rejects fewer than three rows with a clear message") {
+    val init = Em.Params(DenseVector.zeros[Double](3), 1.0)
+    def rows(n: Int) = (1 to n).map(i => ("a", i.toDouble, 0.0, i % 2))
+      .toDF("state", "x1", "x2", "y")
+    Seq(0, 1, 2).foreach { n =>
+      val e = intercept[IllegalArgumentException](
+        Em.fit(rows(n), "y", Seq("x1", "x2"), "state", init, numDraws = 10))
+      assert(e.getMessage.contains(s"at least 3 rows, got $n"), e.getMessage)
+    }
+    // three rows are enough for a finite sigma^2
+    val fit = Em.fit(rows(3), "y", Seq("x1", "x2"), "state", init,
+      numDraws = 10, maxIter = 2)
+    assert(fit.params.sigmaSq.isFinite && fit.params.sigmaSq > 0)
   }
 
   test("ebp with zero draws equals weighted mean of sigmoid(x'beta)") {

@@ -3,7 +3,7 @@ package graft
 import breeze.linalg.DenseVector
 import org.apache.spark.sql.functions._
 
-import graft.stats.{Bootstrap, Glmm}
+import graft.stats.{Bootstrap, CellDesign, Glmm, Optimize}
 
 class GlmmSpec extends SparkSpec {
   import spark.implicits._
@@ -48,35 +48,51 @@ class GlmmSpec extends SparkSpec {
 
   test("fitLogistic cell compression is exact (compressed vs unit-level)") {
     // categorical design: 4 covariate cells regardless of row count —
-    // the compressed fit sees 4 weighted cells, the unit fit 2000 rows
+    // the cell kernel sees 4 weighted cells, the oracle 2000 rows
     val cov = SurveyFixture.covariates(numAreas = 5, rowsPerArea = 400)
       .withColumn("x1", (col("x1") > 0).cast("double"))
     val df = Bootstrap.simulateOutcome(cov, SurveyFixture.trueBeta,
       SurveyFixture.featureCols, "state", Map.empty, Seq("uid"), 13L, 0, "y")
+    val units = UnitOracle.rows(df, "y", SurveyFixture.featureCols, "state")
+    def design(maxLocal: Int) = CellDesign.build(df, "y",
+      SurveyFixture.featureCols, lit(""), maxLocal)
+    val local = design(1 << 16)
+    assert(local.isLocal && local.areas.length == 1)
+    Seq(DenseVector(0.0, 0.0, 0.0), DenseVector(0.3, -0.8, 1.1)).foreach { b =>
+      val (l, g) = Glmm.nll(local, b, 1e-3)
+      val (wl, wg) = UnitOracle.nll(units, b, 1e-3)
+      assert(UnitOracle.close(l, wl), s"loss $l vs $wl")
+      g.toArray.zip(wg.toArray).foreach { case (x, y) =>
+        assert(UnitOracle.close(x, y), s"grad $g vs $wg") }
+    }
+    // the fit over 4 cells lands on the unit-level optimum
     val compressed = Glmm.fitLogistic(df, "y", SurveyFixture.featureCols)
-    val units = Glmm.fitLogistic(df, "y", SurveyFixture.featureCols,
-      compress = false)
-    val d = breeze.linalg.max(breeze.numerics.abs(compressed - units))
-    assert(d < 1e-5, s"compressed=$compressed units=$units")
-    // the bound falls back to the distributed path and still agrees
-    val bounded = Glmm.fitLogistic(df, "y", SurveyFixture.featureCols,
-      maxLocalCells = 2)
-    assert(breeze.linalg.max(breeze.numerics.abs(bounded - units)) < 1e-5)
+    val unitFit = Optimize.lbfgsMin(UnitOracle.nll(units, _, 1e-8),
+      DenseVector.zeros[Double](3), 100)
+    val d = breeze.linalg.max(breeze.numerics.abs(compressed - unitFit))
+    assert(d < 1e-5, s"compressed=$compressed units=$unitFit")
+    // forced onto distributed cells, the fit still agrees
+    val dist = design(2)
+    try {
+      assert(!dist.isLocal)
+      val distFit = Glmm.fitDesign(dist, 1e-8, 100)
+      assert(breeze.linalg.max(breeze.numerics.abs(distFit - compressed)) < 1e-5)
+    } finally dist.unpersist()
   }
 
-  test("nllGrad gradient matches finite differences") {
+  test("cell NLL gradient matches finite differences") {
     val df = SurveyFixture.smallSurvey(numAreas = 5, rowsPerArea = 40)
-    val data = Glmm.designRdd(df, "y", SurveyFixture.featureCols)
+    val d = CellDesign.build(df, "y", SurveyFixture.featureCols, lit(""),
+      CellDesign.MaxLocalCells)
     val beta = DenseVector(0.1, -0.2, 0.3)
-    val (_, grad) = Glmm.nllGrad(data, beta)
+    val (_, grad) = Glmm.nll(d, beta, 0.0)
     val eps = 1e-6
     for (i <- 0 until beta.length) {
       val bp = beta.copy; bp(i) += eps
       val bm = beta.copy; bm(i) -= eps
-      val fd = (Glmm.nllGrad(data, bp)._1 - Glmm.nllGrad(data, bm)._1) / (2 * eps)
-      assert(math.abs(fd - grad(i)) < 1e-4, s"coord $i: fd=$fd grad=${grad(i)}")
+      val fd = (Glmm.nll(d, bp, 0.0)._1 - Glmm.nll(d, bm, 0.0)._1) / (2 * eps)
+      assert(math.abs(fd - grad(i)) < 1e-6, s"coord $i: fd=$fd grad=${grad(i)}")
     }
-    data.unpersist(blocking = false)
   }
 
   test("scoreWithRanef applies u per area and coalesces missing to 0") {

@@ -6,19 +6,6 @@ import graft.stats.Optimize
 
 class OptimizeSpec extends SparkSpec {
 
-  test("goldenMax finds the maximum of a concave function") {
-    val x = Optimize.goldenMax(v => -(v - 2.0) * (v - 2.0), -3, 3)
-    assert(math.abs(x - 2.0) < 1e-6)
-    // maximum at boundary
-    val y = Optimize.goldenMax(v => v, -3, 3)
-    assert(math.abs(y - 3.0) < 1e-6)
-  }
-
-  test("goldenMin finds the minimum") {
-    val x = Optimize.goldenMin(v => (v + 1.5) * (v + 1.5), -3, 3)
-    assert(math.abs(x + 1.5) < 1e-6)
-  }
-
   test("lbfgsMin solves a quadratic") {
     val target = DenseVector(1.0, -2.0, 3.0)
     val sol = Optimize.lbfgsMin({ x =>
