@@ -1045,16 +1045,24 @@ object QueryFuzzer {
 
   // ---- generator -------------------------------------------------------
 
+  /** The [[SetOp]] kinds. Seeds 1 to 4 are reserved, one per kind:
+    * each always takes the SetOp shape with that kind, so every kind
+    * appears in any run of at least four seeds.
+    */
+  private val SetOpKinds = Seq("UNION", "UNION ALL", "INTERSECT", "EXCEPT")
+
   def gen(seed: Int,
           pools: Map[(String, String), IndexedSeq[Any]]): FuzzQuery = {
     val rnd = new scala.util.Random(seed)
     def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    val reservedSetOp = SetOpKinds.lift(seed - 1)
 
     // ~1 seed in 10 goes to the shared-dialect spark.sql family —
     // the subquery placements the Column API cannot express (round
     // 14): ExistenceJoin disjuncts, SELECT-list scalar subqueries,
     // HAVING-side subqueries
-    if (rnd.nextInt(10) == 0) return genViaSql(seed, rnd, pools)
+    if (rnd.nextInt(10) == 0 && reservedSetOp.isEmpty)
+      return genViaSql(seed, rnd, pools)
 
     // base table + 0..4 chained FK joins (inner/left/full)
     val nJoins = rnd.nextInt(12) match {
@@ -1258,7 +1266,9 @@ object QueryFuzzer {
     // literal ASTs in FuzzQueries (never regenerated from seeds), and
     // every campaign runs fresh seeds against whatever the current
     // grammar emits.
-    val shape: Shape = rnd.nextInt(24) match {
+    // a reserved seed takes the SetOp bucket (18-19)
+    val shape: Shape = (if (reservedSetOp.isDefined) 18
+                        else rnd.nextInt(24)) match {
       case n if n < 6 =>
         Proj((0 until (2 + rnd.nextInt(3))).map(genOutCol),
           distinct = rnd.nextInt(10) < 3)
@@ -1319,7 +1329,7 @@ object QueryFuzzer {
         Win2(part, order, funcs)
       case n if n < 20 =>
         SetOp((0 until (2 + rnd.nextInt(2))).map(genOutCol),
-          pick(Seq("UNION", "UNION ALL", "INTERSECT", "EXCEPT")),
+          reservedSetOp.getOrElse(pick(SetOpKinds)),
           genPred(1), genPred(1))
       case n if n < 22 =>
         val groups = Seq.fill(1 + rnd.nextInt(3))(pick(keyCols)).distinct

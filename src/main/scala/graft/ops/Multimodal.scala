@@ -42,12 +42,6 @@ object Multimodal {
       }
       out
     }
-
-    /** "Resize": recompute metadata only (bytes pass through). */
-    def resizeMeta(w: Int, h: Int, maxSide: Int): (Int, Int) = {
-      val scale = math.min(1.0, maxSide.toDouble / math.max(w, h))
-      (math.max(1, (w * scale).toInt), math.max(1, (h * scale).toInt))
-    }
   }
 
   /** Attach a fake media payload + metadata to any table (test/dev

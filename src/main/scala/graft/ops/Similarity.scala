@@ -428,9 +428,6 @@ object Similarity {
       Array.fill(dim)(rng.nextGaussian())))
   }
 
-  private def planeLit(p: Array[Double]): Column =
-    array(p.map(lit): _*)
-
   /** md5-derived Rademacher (±1) hyperplanes — the sign-random-
     * projection family made ORACLE-REPLAYABLE (the same move d07's
     * MinHash and d08's SimHash made): component sign(t,j,d) = +1 iff

@@ -119,48 +119,6 @@ object PipelineQueries {
     (base.agg(max(col("doc_id"))).head().getLong(0) / 1000000L + 1L) *
       1000000L
 
-  /** Stages 0-2 only (cleaned ∩ exact-dedup survivors) — the fuzzy
-    * stage's input, exposed for scale diagnosis without triggering
-    * the eager CC closure.
-    */
-  private[graft] def chainInputsOnly(s: SparkSession,
-                                     dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("source"),
-      col("text"))
-    val off = strideOf(base)
-    val toks = base.withColumn("toks", TextAnalysis.tokens(col("text")))
-    val exactCopies = base.select((col("doc_id") + off).as("doc_id"),
-      col("source"), col("text"))
-    val mutants = toks.select((col("doc_id") + 2 * off).as("doc_id"),
-      col("source"),
-      concat_ws(" ", filter(col("toks"), (t, i) => i =!= 1)).as("text"))
-    val leaks = toks.filter(col("source") === "src0")
-      .select((col("doc_id") + 3 * off).as("doc_id"),
-        lit("leak").as("source"),
-        concat_ws(" ", slice(col("toks"), 1, 30)).as("text"))
-    // fanOut on the UNION (not the scan): the whole chain's map work
-    // (clean/tokenize/shingle/minhash) sits above corpus0, and
-    // `cleaned` is cached with corpus0's partitioning — unfanned, the
-    // cache is ~4 single-file partitions and every consumer runs
-    // near-serial; fanning each scan instead would multiply partitions
-    // x4 through the union and re-exchange every branch (measured
-    // +3s on p01). No-op at real scale (Tables.fanOut scaladoc).
-    val corpus0 = graft.Tables.fanOut(
-      base.unionByName(exactCopies).unionByName(mutants)
-        .unionByName(leaks))
-    val dirty = concat(lit("<p class=\"doc\">"), col("text"),
-      lit("</p> <br/>contact u"), col("doc_id").cast("string"),
-      lit("@example.com or https://data.example.org/d/"),
-      col("doc_id").cast("string"), lit("?ref=x"))
-    val cleaned = corpus0.select(col("doc_id"), col("source"),
-      TextAnalysis.cleanText(dirty).as("clean")).cache()
-    val surv1Ids = cleaned
-      .withColumn("fp", TextAnalysis.fingerprint(col("clean")))
-      .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    cleaned.join(surv1Ids, Seq("doc_id"), "left_semi")
-  }
-
   private[graft] def chain(s: SparkSession, dir: String): Stages = {
     val base = docs(s, dir).select(col("doc_id"), col("source"),
       col("text"))

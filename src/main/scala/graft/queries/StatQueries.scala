@@ -560,9 +560,10 @@ object StatQueries {
 
     // survey raking / IPF (the survey::rake companion to m04's
     // svyby): a 1-in-3 customer subsample raked to the FULL table's
-    // segment and nation margins, 3 cycles — per pass one dimension-
-    // sized groupBy + two broadcast joins, the data never shuffles.
-    // Oracle replays all six scaling passes unrolled.
+    // segment and nation margins, 3 cycles — the six passes run on the
+    // driver over the 5 x 25 (segment, nation) cells of one groupBy,
+    // and the factors join back once, broadcast; the data never
+    // shuffles. Oracle replays all six passes unrolled, row by row.
     "m12_raking" -> ((s, dir) => {
       val full = graft.Tables(s, dir, "customer")
       val samp = full.filter(col("c_custkey") % 3 === 0)

@@ -32,13 +32,4 @@ object Csv {
     spark.read.schema(schema)
       .option("header", header.toString)
       .csv(path)
-
-  /** Read CSV with schema inference — convenience for small files only
-    * (inference is a full extra scan).
-    */
-  def readInferred(spark: SparkSession, path: String,
-                   header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString)
-      .option("inferSchema", "true")
-      .csv(path)
 }

@@ -1,7 +1,11 @@
 package graft.stats
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Design-based survey estimation (SURVEY.md A3/M6).
   *
@@ -25,36 +29,96 @@ object Survey {
     * row weights so the weighted margins match known population totals
     * over each margin variable in turn, cycling `iters` times. Each
     * `margins` entry is (category column, targets DataFrame carrying
-    * that column + a `_target` total); one IPF pass multiplies every
-    * row's weight by target/current for its category.
+    * that column + a `_target` total).
     *
-    * Scale shape: per margin per iteration, ONE map-side-combining
-    * groupBy for the current margin sums and two BROADCAST joins
-    * (margin tables are category-dimension-sized by definition) — the
-    * data never shuffles, weights update in a narrow projection.
-    * Convergence is the classical IPF result (margins are matched
-    * exactly for the LAST margin of the final cycle and geometrically
-    * closer for earlier ones); a fixed small `iters` is the standard
-    * practice. Any category with sample rows has a positive weight
-    * sum, so the scaling ratio is always defined.
+    * Raking scales every row of one cross-classification cell (one
+    * combination of the margin columns) by the same factor, so IPF runs
+    * on the cell table: ONE groupBy(margin columns).agg(sum(w)),
+    * collected to the driver in one collect with the target tables. Each
+    * pass sums the cell weights per category of one margin and
+    * multiplies every cell's running factor by target / sum, over the
+    * cells in sorted key order, so the result does not depend on
+    * partitioning. The final factors join back to `df` once, broadcast:
+    * the rows never shuffle, and the plan has the same size for any
+    * `iters`. Convergence is the classical IPF result (the LAST margin
+    * of the final cycle is matched exactly, earlier ones geometrically
+    * closer); a fixed small `iters` is the standard practice.
+    *
+    * The call is EAGER: it runs that one collect before it returns. The
+    * cell table may hold at most [[CellDesign.MaxLocalCells]] cells.
+    * Rejected, naming the margin column and category: a null category
+    * in `df`, a category of `df` with no target, a category listed
+    * twice in one target table, a target that is not > 0. The result
+    * keeps `df`'s columns in their order.
     */
   def rake(df: DataFrame, weightCol: String,
            margins: Seq[(String, DataFrame)], iters: Int): DataFrame = {
-    var cur = df
-    var it = 0
-    while (it < iters) {
-      margins.foreach { case (c, tgt) =>
-        val sums = cur.groupBy(c).agg(sum(weightCol).as("_cursum"))
-        cur = cur.join(broadcast(sums), c)
-          .join(broadcast(tgt), c)
-          .withColumn(weightCol,
-            col(weightCol) * col("_target") / col("_cursum"))
-          .drop("_cursum", "_target")
-      }
-      it += 1
+    val keys = margins.map(_._1)
+    require(keys.nonEmpty && keys.distinct.size == keys.size,
+      s"rake needs distinct margin columns, got ${keys.mkString(", ")}")
+    val nk = keys.size
+    val types = keys.map(df.schema(_).dataType)
+    // one collect: the cells (tag -1) and the targets of margin i (tag i),
+    // unioned by position as (key_0 .. key_nk-1, tag, value)
+    val cellsQ = df.groupBy(keys.map(col): _*)
+      .agg(lit(-1), coalesce(sum(col(weightCol).cast("double")), lit(0.0)))
+      .limit(CellDesign.MaxLocalCells + 1)
+    val targetsQ = margins.zipWithIndex.map { case ((c, t), i) =>
+      t.select(keys.indices.map(j =>
+          (if (j == i) col(c) else lit(null)).cast(types(j))) :+
+        lit(i) :+ col("_target").cast("double"): _*)
     }
-    cur
+    val (cellRows, targetRows) = (cellsQ +: targetsQ).reduce(_ union _)
+      .collect().partition(_.getInt(nk) < 0)
+    require(cellRows.length <= CellDesign.MaxLocalCells,
+      s"rake: the margins split df into " +
+        s"${df.select(keys.map(col): _*).distinct().count()} cells, " +
+        s"more than ${CellDesign.MaxLocalCells}")
+
+    val targets = Array.fill(nk)(mutable.Map.empty[Any, Double])
+    for (r <- targetRows; i = r.getInt(nk); v = r.get(i)) {
+      require(!targets(i).contains(v),
+        s"rake: the targets of margin '${keys(i)}' list category '$v' twice")
+      require(!r.isNullAt(nk + 1) && r.getDouble(nk + 1) > 0,
+        s"rake: margin '${keys(i)}' has target ${r.get(nk + 1)} for " +
+          s"category '$v'; targets must be > 0")
+      targets(i)(v) = r.getDouble(nk + 1)
+    }
+    for (r <- cellRows; i <- keys.indices) {
+      require(!r.isNullAt(i),
+        s"rake: margin column '${keys(i)}' has a null category in df")
+      require(targets(i).contains(r.get(i)),
+        s"rake: margin '${keys(i)}' has no target for category '${r.get(i)}'")
+    }
+
+    def key(r: Row): Seq[Any] = (0 until nk).map(r.get)
+    val cells = cellRows.sortBy(key)(keyOrdering)
+    val f = Array.fill(cells.length)(1.0)
+    for (_ <- 0 until iters; i <- keys.indices) {
+      def cat(k: Int) = cells(k).get(i)
+      val sums = f.indices.groupMapReduce(cat)(k =>
+        f(k) * cells(k).getDouble(nk + 1))(_ + _)
+      for (k <- f.indices) f(k) *= targets(i)(cat(k)) / sums(cat(k))
+    }
+
+    val factors = df.sparkSession.createDataFrame(
+      cells.indices.map(k => Row.fromSeq(key(cells(k)) :+ f(k))).asJava,
+      StructType(keys.zip(types).map { case (k, t) => StructField(k, t) } :+
+        StructField("_rake_factor", DoubleType)))
+    df.join(broadcast(factors), keys)
+      .select(df.columns.toSeq.map(c =>
+        if (c == weightCol) (col(c) * col("_rake_factor")).as(c)
+        else col(c)): _*)
   }
+
+  /** Column-by-column order of non-null cell keys: Spark's external
+    * values of orderable types (strings, boxed numbers, booleans,
+    * dates, timestamps, decimals) are all `java.lang.Comparable`.
+    */
+  private val keyOrdering: Ordering[Seq[Any]] = (a, b) =>
+    a.iterator.zip(b.iterator)
+      .map { case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y) }
+      .find(_ != 0).getOrElse(0)
 
   /** Fay–Herriot area-level EB blend (Fay & Herriot 1979; simple
     * moment variance estimator in the Prasad–Rao 1990 family) — the

@@ -20,9 +20,10 @@ import graft.fuzz.{Differ, QueryFuzzer}
 class FuzzSpec extends SparkSpec {
 
   // quick scale 140, not lower: the construct-coverage assertions below
-  // (all four set-op kinds, every window function, ...) are part of the
-  // gate, and the seeded grammar needs ~140 seeds before every family
-  // appears (60 missed UNION and UNION ALL, 100 still missed UNION ALL)
+  // (every window function, join type, subquery form, ...) are part of
+  // the gate, and the seeded grammar needs on the order of 140 seeds
+  // before every family appears. The four set-op kinds are covered by
+  // construction: seeds 1-4 are reserved, one per kind.
   private val NumQueries = FuzzScale.n(220, 140)
   private lazy val pools = QueryFuzzer.samplePools(spark, sf001)
 

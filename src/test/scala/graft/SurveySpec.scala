@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.stats.Survey
@@ -7,18 +8,47 @@ import graft.stats.Survey
 class SurveySpec extends SparkSpec {
   import spark.implicits._
 
-  test("rake matches IPF margins: last margin exact, first converging") {
+  /** 600 unit-weight rows whose category frequencies are deliberately
+    * off the targets, and the targets of their two margins (ca: 2
+    * categories, cb: 4).
+    */
+  private lazy val (df, ta, tb) = {
     val rnd = new scala.util.Random(5)
-    // biased sample: category frequencies deliberately off the targets
     val rows = (0 until 600).map { i =>
       val a = if (rnd.nextDouble() < 0.7) "a1" else "a2"
       val b = s"b${rnd.nextInt(4)}"
       (i.toLong, a, b, 1.0)
     }
-    val df = rows.toDF("id", "ca", "cb", "w")
-    val ta = Seq(("a1", 300.0), ("a2", 300.0)).toDF("ca", "_target")
-    val tb = Seq(("b0", 100.0), ("b1", 200.0), ("b2", 150.0),
-      ("b3", 150.0)).toDF("cb", "_target")
+    (rows.toDF("id", "ca", "cb", "w"),
+      Seq(("a1", 300.0), ("a2", 300.0)).toDF("ca", "_target"),
+      Seq(("b0", 100.0), ("b1", 200.0), ("b2", 150.0),
+        ("b3", 150.0)).toDF("cb", "_target"))
+  }
+
+  /** Raking `sample` keeps its columns and matches row-level IPF over
+    * its collected rows (each pass scales every row's weight by target /
+    * the current weight sum of its category) to a relative 1e-12.
+    */
+  private def assertMatchesRowIpf(sample: DataFrame, cats: Seq[String],
+                                  targets: Seq[DataFrame], iters: Int): Unit = {
+    val rows = sample.collect()
+    val w = rows.map(_.getAs[Double]("w"))
+    val t = targets.map(_.as[(String, Double)].collect().toMap)
+    for (_ <- 0 until iters; i <- cats.indices) {
+      def cat(r: Int) = rows(r).getAs[String](cats(i))
+      val sums = rows.indices.groupMapReduce(cat)(w(_))(_ + _)
+      rows.indices.foreach(r => w(r) = w(r) * t(i)(cat(r)) / sums(cat(r)))
+    }
+    val raked = Survey.rake(sample, "w", cats.zip(targets), iters)
+    assert(raked.columns.toSeq == sample.columns.toSeq)
+    val got = raked.select($"id", $"w").as[(Long, Double)].collect().toMap
+    assert(got.size == rows.length)
+    for (r <- rows.indices; id = rows(r).getAs[Long]("id"))
+      assert(math.abs(got(id) - w(r)) <= 1e-12 * math.abs(w(r)),
+        s"row $id: raked ${got(id)}, row-level IPF ${w(r)}")
+  }
+
+  test("rake matches IPF margins: last margin exact, first converging") {
     val raked = Survey.rake(df, "w", Seq("ca" -> ta, "cb" -> tb),
       iters = 5).cache()
     // the LAST margin of the final cycle is matched exactly
@@ -43,6 +73,60 @@ class SurveySpec extends SparkSpec {
     val first = raked.select($"id", round($"w", 9).as("w"))
       .as[(Long, Double)].collect().toMap
     assert(again == first)
+  }
+
+  test("rake matches a row-level IPF oracle: two margins with unit " +
+      "weights, three margins with unequal weights") {
+    assertMatchesRowIpf(df, Seq("ca", "cb"), Seq(ta, tb), iters = 5)
+    val rnd = new scala.util.Random(11)
+    val df3 = (0 until 400).map { i =>
+      (i.toLong, s"a${rnd.nextInt(3)}", s"b${rnd.nextInt(4)}",
+        if (rnd.nextDouble() < 0.6) "c0" else "c1",
+        0.5 + 2.0 * rnd.nextDouble())
+    }.toDF("id", "ca", "cb", "cc", "w")
+    val t3 = Seq(
+      Seq(("a0", 500.0), ("a1", 300.0), ("a2", 200.0)).toDF("ca", "_target"),
+      Seq(("b0", 100.0), ("b1", 400.0), ("b2", 250.0), ("b3", 250.0))
+        .toDF("cb", "_target"),
+      Seq(("c0", 450.0), ("c1", 550.0)).toDF("cc", "_target"))
+    assertMatchesRowIpf(df3, Seq("ca", "cb", "cc"), t3, iters = 4)
+  }
+
+  test("rake's plan has the same size for any number of cycles") {
+    def leaves(iters: Int) = Survey.rake(df, "w",
+        Seq("ca" -> ta, "cb" -> tb), iters)
+      .queryExecution.optimizedPlan.collectLeaves().size
+    assert(leaves(1) == leaves(8), s"${leaves(1)} vs ${leaves(8)}")
+  }
+
+  private def rakeError(sample: DataFrame, ta: DataFrame, tb: DataFrame) =
+    intercept[IllegalArgumentException] {
+      Survey.rake(sample, "w", Seq("ca" -> ta, "cb" -> tb), iters = 2)
+    }.getMessage
+
+  test("rake rejects a null category in the sample") {
+    val msg = rakeError(df.withColumn("cb",
+      when($"id" === 7L, lit(null)).otherwise($"cb")), ta, tb)
+    assert(msg.contains("'cb'") && msg.contains("null"), msg)
+  }
+
+  test("rake rejects a sample category with no target") {
+    val msg = rakeError(df, ta, tb.filter($"cb" =!= "b3"))
+    assert(msg.contains("'cb'") && msg.contains("'b3'"), msg)
+  }
+
+  test("rake rejects a target table that lists a category twice") {
+    val msg = rakeError(df, ta,
+      tb.union(Seq(("b1", 200.0)).toDF("cb", "_target")))
+    assert(msg.contains("'cb'") && msg.contains("'b1' twice"), msg)
+  }
+
+  test("rake rejects a target that is not positive") {
+    for (bad <- Seq(0.0, -50.0)) {
+      val msg = rakeError(df, ta.withColumn("_target",
+        when($"ca" === "a2", lit(bad)).otherwise($"_target")), tb)
+      assert(msg.contains("'ca'") && msg.contains("'a2'"), msg)
+    }
   }
 
   test("weightedMeanCov: diagonal equals the closed-form Taylor " +
