@@ -148,30 +148,13 @@ object StatQueries {
         .orderBy("state")
     }),
 
-    // M5 — EBP small-area estimates on the big survey
+    // M5 — EBP small-area estimates on the big survey, scored on the
+    // driver from its weighted (area, x) cell table: one scan, no join
+    // of the draws onto its rows (PlanSpec m03)
     "m03_ebp" -> ((s, dir) => {
       val fit = emFit(s, dir)
       Em.ebp(bigSurvey(s, dir), fit.params, featureCols, "state", "weight",
           fit.draws, ebpDraws = 100)
-        .select(col("state"), round(col("ebp"), 4).as("ebp"))
-        .orderBy("state")
-    }),
-
-    // M5 at the true-scale representation: the SAME EBP estimator as
-    // m03 through Em.ebpKeyedDraws — draws generated inside the
-    // aggregate by hash-keyed Box-Muller from the (area, vhat, tau)
-    // mode table instead of driver-materialized arrays (the SURVEY §7
-    // hard-parts-2 pivot). Rows-only like m03 (seeded numerics);
-    // EmSpec gates tau=0 exactness and tau>0 MC agreement vs m03's
-    // broadcast path.
-    "m28_ebp_keyed" -> ((s, dir) => {
-      val fit = emFit(s, dir)
-      val modes = {
-        import s.implicits._
-        fit.modes.map(m => (m.area, m.vhat, m.tau)).toDF("state", "vhat", "tau")
-      }
-      Em.ebpKeyedDraws(bigSurvey(s, dir), fit.params, featureCols,
-          "state", "weight", modes, ebpDraws = 100, seed = 42L)
         .select(col("state"), round(col("ebp"), 4).as("ebp"))
         .orderBy("state")
     }),
@@ -579,7 +562,9 @@ object StatQueries {
         .orderBy("seg", "nat")
     }),
 
-    // M7/M8 — parametric bootstrap MSPE (tiny B; full runs are offline)
+    // M7/M8 — parametric bootstrap MSPE (tiny B; full runs are offline).
+    // Its Spark work is one scan per survey whatever B is; the B EM
+    // refits run on the driver (`concurrency` threads)
     "m05_bootstrap_mspe" -> ((s, dir) =>
       bootstrapMspe(s, dir)
         .select(col("state"), round(col("mspe"), 4).as("mspe"))
@@ -655,7 +640,9 @@ object StatQueries {
     // (Method_code.Rmd:729-733) — affordable since the sufficient-
     // statistics cell compression (round 6: the B=2 gate existed for
     // the 476s pre-compression era; runtime recorded in BASELINE.md).
-    // SPARK_GRAFT_FIDELITY_B still overrides for quick local runs.
+    // SPARK_GRAFT_FIDELITY_B still overrides for quick local runs; the
+    // B simulated outcomes are columns of one scan of the small survey,
+    // so only the driver-side refits grow with B.
     // Rows-only by nature; exact values golden-tested in
     // EmSpec/BootstrapSpec.
     "m11_reference_fidelity" -> ((s, dir) => {

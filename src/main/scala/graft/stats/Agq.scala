@@ -95,8 +95,9 @@ object Agq {
         while (r < q) {
           val eta = eta0 + vs(r)
           val idx = c.area * q + r
-          s(idx) += c.sumY * eta - c.m * Glmm.log1pExp(eta)
-          val resid = c.sumY - c.m * Glmm.sigmoidD(eta)
+          val (l, p) = Glmm.log1pExpSigmoid(eta)
+          s(idx) += c.sumY * eta - c.m * l
+          val resid = c.sumY - c.m * p
           i = 0
           while (i < k) { g(idx * k + i) += resid * c.x(i); i += 1 }
           r += 1

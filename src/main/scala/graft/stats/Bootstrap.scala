@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
 
 import graft.etl.Encodings
-import graft.rel.Relational
 
 /** Parametric bootstrap for MSPE (SURVEY.md M7-M8;
   * `Method_code.Rmd:557-758`).
@@ -43,54 +42,38 @@ object Bootstrap {
 
   /** Simulate the binary outcome y* on `df` under (beta, sigma)
     * (Method_code.Rmd:564-586 — also the generative model for the
-    * recovery tests, FIXTURES.md A4).
+    * recovery tests, FIXTURES.md A4). Areas missing from `vB` get
+    * v = 0. The area effect is a lookup in a map literal, not a join,
+    * so simulating B outcomes on one frame adds no Spark job per
+    * outcome.
     */
   def simulateOutcome(df: DataFrame, beta: DenseVector[Double],
                       featureCols: Seq[String], areaCol: String,
                       vB: Map[String, Double], idCols: Seq[String],
                       seed: Long, b: Int, yCol: String = "y_sim"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vDf = vB.toSeq.toDF(areaCol, "v_b")
-    val theta = Encodings.sigmoid(
-      Glmm.xBetaCol(beta, featureCols) + coalesce(col("v_b"), lit(0.0)))
-    df.join(broadcast(vDf), Seq(areaCol), "left")
-      .withColumn(yCol,
-        (keyedUniform(idCols, seed, b) < theta).cast("int"))
-      .drop("v_b")
-  }
-
-  /** Replicate "truth": weighted mean of sigmoid(x'beta + v_b) over the
-    * big survey (Method_code.Rmd:689-696).
-    */
-  def replicateTruth(big: DataFrame, beta: DenseVector[Double],
-                     featureCols: Seq[String], areaCol: String, wCol: String,
-                     vB: Map[String, Double], scale: Double = 100.0): DataFrame = {
-    val spark = big.sparkSession
-    import spark.implicits._
-    val vDf = vB.toSeq.toDF(areaCol, "v_b")
-    val theta = Encodings.sigmoid(
-      Glmm.xBetaCol(beta, featureCols) + coalesce(col("v_b"), lit(0.0)))
-    Relational.weightedMean(
-      big.join(broadcast(vDf), Seq(areaCol), "left").withColumn("theta", theta),
-      Seq(areaCol), col("theta"), col(wCol).cast("double"), scale, "truth")
+    val theta = Encodings.sigmoid(Glmm.xBetaCol(beta, featureCols) +
+      coalesce(try_element_at(typedLit(vB), col(areaCol)), lit(0.0)))
+    df.withColumn(yCol, (keyedUniform(idCols, seed, b) < theta).cast("int"))
   }
 
   /** Full bootstrap: B replicates -> per-area RMSE of (truth - est).
-    * Replicates are independent job DAGs and are SUBMITTED CONCURRENTLY
-    * from driver threads (`concurrency` at a time): Spark's scheduler
-    * interleaves their stages, so cluster slots stay busy while any one
-    * replicate sits in a driver-side step (L-BFGS line search, Newton
-    * updates). Results are order-independent — every random stream is
-    * keyed by (seed, replicate, unit), not by execution interleaving.
-    * Default concurrency 2 — a LIBRARY default sized for memory
-    * safety: each in-flight replicate caches its simulated survey, so
-    * the default bounds peak storage pressure for arbitrary callers
-    * (ADVICE r14). Callers whose replicates' cell designs fit on the
-    * driver (single-threaded EM math per replicate, cluster idle)
-    * should pass a higher value to overlap those fits (guide §2.6);
-    * the m05/m11 bench entries pass 8, the round-14-measured sweet spot
-    * (m11 8.12 -> 6.29 s solo).
+    *
+    * The replicates read each survey through one cell table:
+    *   - the small survey's B simulated outcomes are B columns
+    *     (`y_sim_1` .. `y_sim_B`, each [[simulateOutcome]] with its
+    *     replicate's keyed draws) of ONE scan, reduced to B
+    *     [[CellDesign]]s that share the cells and differ only in sumY;
+    *   - the big survey is ONE weighted design, on which every
+    *     replicate's EBP and truth, the weighted mean of
+    *     sigmoid(x'beta + v_b) (Method_code.Rmd:689-696), are scored
+    *     together in one pass ([[Em.scoreAreas]]).
+    * So the Spark work does not grow with B. The B EM refits run on the
+    * driver, `concurrency` at a time on a thread pool (an EM over a
+    * driver-held design is single-threaded). Results are
+    * order-independent — every random stream is keyed by (seed,
+    * replicate, unit or area), not by execution interleaving. Returns a
+    * local DataFrame (`areaCol` as a string, `mspe`), one row per area
+    * of `big`, sorted by area.
     *
     * Per-replicate EM initialization (`initScheme`):
     *   - `"reference"` (default) — the reference's scheme
@@ -98,10 +81,12 @@ object Bootstrap {
     *     every beta = 0.1, iterate to `tol`. (The reference also fits
     *     glmer on each replicate at `Method_code.Rmd:602-607`, but only
     *     to PRINT diagnostics — the EM init is the constants.)
-    *   - `"refit"` — seed beta from a per-replicate logistic refit on
-    *     the simulated outcome (+ truth sigma^2). A deliberate
-    *     divergence: starts near the optimum so a small `emIters` cap
-    *     suffices — the bench configuration.
+    *   - `"refit"` — seed beta from a per-replicate logistic fit on
+    *     the simulated outcome ([[Glmm.fitDesign]] over the replicate's
+    *     design summed over areas, the table [[Glmm.fitLogistic]]
+    *     would build) + truth sigma^2. A deliberate divergence: starts
+    *     near the optimum so a small `emIters` cap suffices — the bench
+    *     configuration.
     */
   def mspe(small: DataFrame, big: DataFrame, yCol: String,
            featureCols: Seq[String], areaCol: String, wCol: String,
@@ -111,40 +96,40 @@ object Bootstrap {
            tol: Double = 0.01, concurrency: Int = 2): DataFrame = {
     require(Set("reference", "refit")(initScheme),
       s"initScheme must be reference|refit, got $initScheme")
-    val areas = big.select(areaCol).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    require(numB >= 1, s"numB must be at least 1, got $numB")
     val sigma = math.sqrt(truth.sigmaSq)
-    def replicate(b: Int): DataFrame = {
-      val vB = drawAreaEffects(areas, sigma, seed, b)
-      val sim = simulateOutcome(small, truth.beta, featureCols, areaCol, vB,
-        idCols, seed, b).cache()
-      val fit =
-        try {
+    val reps = 1 to numB
+    CellDesign.usingWeighted(big, wCol, featureCols, col(areaCol)) { bigD =>
+      val vBs = reps.map(b => drawAreaEffects(bigD.areas.toSeq, sigma, seed, b))
+      val sim = reps.foldLeft(small)((df, b) => simulateOutcome(df, truth.beta,
+        featureCols, areaCol, vBs(b - 1), idCols, seed, b, s"y_sim_$b"))
+      val fits = CellDesign.usingAll(sim, reps.map(b => s"y_sim_$b"), featureCols,
+          col(areaCol), None) { designs =>
+        def fit(b: Int): Em.Fit = {
+          val d = designs(b - 1)
           val init =
-            if (initScheme == "refit") Em.Params(
-              Glmm.fitLogistic(sim, "y_sim", featureCols), truth.sigmaSq)
-            else Em.Params(
-              DenseVector.fill(featureCols.length + 1)(0.1), 0.1 * 0.1)
-          Em.fit(sim, "y_sim", featureCols, areaCol, init,
-            numDraws = numDraws, tol = tol, maxIter = emIters, seed = seed + b)
-        } finally sim.unpersist(blocking = false)
-      val est = Em.ebp(big, fit.params, featureCols, areaCol, wCol,
-        fit.draws, ebpDraws)
-      val tru = replicateTruth(big, truth.beta, featureCols, areaCol, wCol, vB)
-      est.join(tru, Seq(areaCol)).withColumn("boot_id", lit(b))
+            if (initScheme == "refit")
+              Em.Params(Glmm.fitDesign(d.pooled), truth.sigmaSq)
+            else Em.Params(DenseVector.fill(featureCols.length + 1)(0.1), 0.1 * 0.1)
+          Em.fitDesign(d, init, numDraws, tol, emIters, seed + b, vBound = 3.0)
+        }
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, math.min(numB, concurrency)))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        try scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(reps.map(b => scala.concurrent.Future(fit(b)))),
+          scala.concurrent.duration.Duration.Inf)
+        finally pool.shutdown()
+      }
+      val scores = Em.scoreAreas(bigD,
+        reps.map(b => fits(b - 1).params.beta -> Em.areaDraws(bigD, fits(b - 1).draws, ebpDraws)) ++
+          reps.map(b => truth.beta -> bigD.areas.map(a => Array(vBs(b - 1)(a)))),
+        scale = 100.0)
+      val mspe = bigD.areas.indices.map { a =>
+        math.sqrt(reps.map(b => math.pow(scores(numB + b - 1)(a) - scores(b - 1)(a), 2)).sum / numB)
+      }.toArray
+      Em.areaFrame(big.sparkSession, areaCol, "mspe", bigD.areas, mspe)
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(numB, concurrency)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val perB =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          (1 to numB).map(b => scala.concurrent.Future(replicate(b)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    Relational.unionAll(perB)
-      .groupBy(areaCol)
-      .agg(sqrt(avg(pow(col("truth") - col("ebp"), 2))).as("mspe"))
   }
 }

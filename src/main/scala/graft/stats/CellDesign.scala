@@ -5,26 +5,32 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
 /** A logistic design reduced to its distinct (area, x) cells — the one
-  * data representation the fits in this package run on ([[Glmm]],
-  * [[Em]], [[Agq]]).
+  * data representation the fits and scorers in this package run on
+  * ([[Glmm]], [[Em]], [[Agq]], [[Bootstrap]]).
   *
   * Every objective those fits optimize depends on the rows only through
   * (area, x): y enters linearly, so per-row sums collapse EXACTLY to
   * cell-weighted sums, sum_j f(eta_j) = sum_c m_c f(eta_c) and
   * sum_j y_j g(eta_j) = sum_c sumY_c g(eta_c) — the frequency-weight
-  * trick of R's `glm(weights=)`. For categorical designs (the
-  * reference's model: area x two binary indicators) the table is
-  * dimension-sized whatever the row count, so ONE map-side-combining
-  * shuffle replaces a pass over the rows per objective evaluation.
+  * trick of R's `glm(weights=)`. A weighted design (the big survey the
+  * EBP scores) carries m_c = the cell's weight total instead, since a
+  * weighted mean of f(eta_j) is sum_c W_c f(eta_c) / sum_c W_c. For
+  * categorical designs (the reference's model: area x two binary
+  * indicators) the table is dimension-sized whatever the row count, so
+  * ONE map-side-combining shuffle replaces a pass over the rows per
+  * objective evaluation.
   *
   * A table of at most [[CellDesign.MaxLocalCells]] cells is held on the
   * driver, sorted by (area, x) so driver-side sums do not depend on
   * partitioning or collect order; a larger one stays a cached RDD.
   * [[aggregate]] hides which — a driver loop or a `treeAggregate` — so
-  * every kernel is written once.
+  * every kernel is written once. Designs built together (one per
+  * outcome column) share that cache; [[unpersist]] on any of them
+  * releases it for all.
   *
   * @param areas   distinct area keys, sorted; [[CellDesign.Cell.area]]
   *                indexes this array
@@ -33,7 +39,9 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] final class CellDesign private (
     val areas: Array[String], val nByArea: Array[Long], val k: Int,
-    cells: Either[Array[CellDesign.Cell], RDD[CellDesign.Cell]]) {
+    cells: Either[Array[CellDesign.Cell], RDD[CellDesign.Cell]],
+    cache: Option[RDD[_]]) {
+  import CellDesign.Cell
 
   val totalN: Long = nByArea.sum
 
@@ -43,7 +51,7 @@ private[graft] final class CellDesign private (
     * accumulator in place; `merge` combines two partial results (used
     * only by the distributed `treeAggregate`).
     */
-  def aggregate[U: ClassTag](zero: U)(add: (U, CellDesign.Cell) => U,
+  def aggregate[U: ClassTag](zero: U)(add: (U, Cell) => U,
                                       merge: (U, U) => U): U =
     cells match {
       case Left(cs) =>
@@ -54,73 +62,153 @@ private[graft] final class CellDesign private (
       case Right(rdd) => rdd.treeAggregate(zero)(add, merge, depth = 2)
     }
 
+  /** This design summed over areas: one area "" whose cells add m and
+    * sumY over every area sharing an x — the table [[Glmm.fitLogistic]]
+    * builds from the same rows. On the driver those are exact integer
+    * sums in the same (x-sorted) order, so a fit over it is
+    * bit-identical to one over the rebuilt table. A distributed design
+    * relabels its cells to the one area instead: the same sums, in
+    * another order, and no Spark job.
+    */
+  def pooled: CellDesign = {
+    val one = cells match {
+      case Left(cs) =>
+        import scala.math.Ordering.Implicits._
+        Left(cs.groupBy(_.x.toSeq).toArray.sortBy(_._1).map { case (_, g) =>
+          Cell(0, g.head.x, g.map(_.m).sum, g.map(_.sumY).sum)
+        })
+      case Right(rdd) => Right(rdd.map(_.copy(area = 0)))
+    }
+    new CellDesign(Array(""), Array(totalN), k, one, cache)
+  }
+
   /** Release the cached cell RDD (nothing to do on the driver). */
-  def unpersist(): Unit = cells.foreach(_.unpersist(blocking = false))
+  def unpersist(): Unit = cache.foreach(_.unpersist(blocking = false))
 }
 
 private[graft] object CellDesign {
 
-  /** One distinct-covariate cell: `m` rows of area `areas(area)` share
-    * the covariate vector `x` (intercept at index 0), and `sumY` of
-    * them have y = 1.
+  /** One distinct-covariate cell: `m` rows (or, in a weighted design,
+    * weight `m`) of area `areas(area)` share the covariate vector `x`
+    * (intercept at index 0), and `sumY` of them have y = 1.
     */
   final case class Cell(area: Int, x: Array[Double], m: Double, sumY: Double)
 
   /** Largest cell table held on the driver. */
   val MaxLocalCells: Int = 1 << 16
 
-  /** The cell table of `df`: groupBy(area, features) -> (m = count,
-    * sumY = sum y). Its output is bounded by the covariate-cell
-    * cardinality, not the row count.
+  /** The cell table of `df`: groupBy(area, features) -> (n = count,
+    * nulls = rows with a null outcome or weight, m, sumY0 .. sumY{B-1}
+    * = sum of each `yCols` column). m is n, or the cell's weight total
+    * when `weight` is given; weights are summed as decimal(38, 18) so the
+    * total is exact and does not depend on partitioning. The output is
+    * bounded by the covariate-cell cardinality, not the row count.
     */
-  private[stats] def compress(df: DataFrame, yCol: String,
-                              featureCols: Seq[String], area: Column): DataFrame =
+  private[graft] def compress(df: DataFrame, yCols: Seq[String],
+                              featureCols: Seq[String], area: Column,
+                              weight: Option[String]): DataFrame = {
+    val anyNull = (weight.toSeq ++ yCols).map(col(_).isNull)
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val m = weight.fold(count(lit(1)))(w => sum(col(w).cast(DecimalType(38, 18))))
     df.groupBy((area.cast("string").as("area") +:
         featureCols.map(c => col(c).cast("double").as(c))): _*)
-      .agg(count(lit(1)).as("m"),
-        sum(col(yCol).cast("double")).as("sumY"))
+      .agg(count(lit(1)).as("n"), (Seq(count(when(anyNull, 1)).as("nulls"),
+        m.cast("double").as("m")) ++
+        yCols.zipWithIndex.map { case (y, j) =>
+          sum(col(y).cast("double")).as(s"sumY$j") }): _*)
+  }
 
   /** Build the design of `df`, run `f` on it, release it. */
   def using[T](df: DataFrame, yCol: String, featureCols: Seq[String],
-               area: Column)(f: CellDesign => T): T = {
-    val d = build(df, yCol, featureCols, area, MaxLocalCells)
-    try f(d) finally d.unpersist()
+               area: Column)(f: CellDesign => T): T =
+    usingAll(df, Seq(yCol), featureCols, area, None)(ds => f(ds.head))
+
+  /** Build the weighted design of `df` (m = the cell's total of `wCol`,
+    * no outcome), run `f` on it, release it.
+    */
+  def usingWeighted[T](df: DataFrame, wCol: String, featureCols: Seq[String],
+                       area: Column)(f: CellDesign => T): T =
+    usingAll(df, Nil, featureCols, area, Some(wCol))(ds => f(ds.head))
+
+  /** Build the designs of `df` ([[buildAll]]), run `f` on them,
+    * release them.
+    */
+  def usingAll[T](df: DataFrame, yCols: Seq[String], featureCols: Seq[String],
+                  area: Column, weight: Option[String])(
+      f: IndexedSeq[CellDesign] => T): T = {
+    val ds = buildAll(df, yCols, featureCols, area, weight, MaxLocalCells)
+    try f(ds) finally ds.foreach(_.unpersist())
   }
 
-  /** The design of `df`, held on the driver iff it has at most
-    * `maxLocal` cells. Fits pass [[MaxLocalCells]]; tests pass other
-    * bounds to force either side on small data. Release it with
-    * [[CellDesign.unpersist]].
-    */
+  /** The design of `df` for outcome `yCol`; see [[buildAll]]. */
   def build(df: DataFrame, yCol: String, featureCols: Seq[String],
-            area: Column, maxLocal: Int): CellDesign = {
+            area: Column, maxLocal: Int): CellDesign =
+    buildAll(df, Seq(yCol), featureCols, area, None, maxLocal).head
+
+  /** One design of `df` per outcome in `yCols`, all from ONE groupBy:
+    * they share the cells and m and differ only in sumY. With no
+    * outcome there is one design, with sumY = 0 (a weighted design to
+    * score on). The designs are held on the driver iff the table has at
+    * most `maxLocal` cells. Fits pass [[MaxLocalCells]]; tests pass
+    * other bounds to force either side on small data. Release them with
+    * [[CellDesign.unpersist]].
+    *
+    * A null area, feature, outcome or weight fails here, naming the
+    * column: each would otherwise drop or miscount rows silently. An
+    * outcome design needs at least three rows.
+    */
+  def buildAll(df: DataFrame, yCols: Seq[String], featureCols: Seq[String],
+               area: Column, weight: Option[String],
+               maxLocal: Int): IndexedSeq[CellDesign] = {
     val nf = featureCols.length
-    val cellsDf = compress(df, yCol, featureCols, area)
+    val nY = yCols.length
+    def nullCheck(found: Iterator[(Boolean, Option[Int], Long)]): Unit =
+      found.foreach { case (areaNull, feature, nulls) =>
+        feature.foreach(i => throw new IllegalArgumentException(
+          s"null values in feature column '${featureCols(i)}'"))
+        require(!areaNull, s"null values in area column '$area'")
+        require(nulls == 0,
+          s"null values in column ${(weight.toSeq ++ yCols).mkString("'", "' or '", "'")}")
+      }
+    def designs(areas: Array[String], n: Array[Long],
+                cells: Int => Either[Array[Cell], RDD[Cell]],
+                cache: Option[RDD[_]]): IndexedSeq[CellDesign] =
+      (0 until math.max(1, nY)).map(j => new CellDesign(areas, n, nf + 1, cells(j), cache))
+    val cellsDf = compress(df, yCols, featureCols, area, weight)
     val rows = cellsDf.limit(maxLocal + 1).collect()
     if (rows.length <= maxLocal) {
+      nullCheck(rows.iterator.map(r => (r.isNullAt(0),
+        (0 until nf).find(i => r.isNullAt(i + 1)), r.getLong(nf + 2))))
       import scala.math.Ordering.Implicits._
-      val sorted = rows.map(r => (r.getString(0), toCell(r, 0, nf)))
-        .sortBy { case (a, c) => (a, c.x.toSeq) }
+      val sorted = rows.map(r => (r.getString(0), r.getLong(nf + 1), toCells(r, 0, nf, nY)))
+        .sortBy { case (a, _, cs) => (a, cs(0).x.toSeq) }
       val areas = sorted.map(_._1).distinct
       val index = areas.zipWithIndex.toMap
-      val cs = sorted.map { case (a, c) => c.copy(area = index(a)) }
       val n = new Array[Long](areas.length)
-      cs.foreach(c => n(c.area) += c.m.toLong)
-      checkRows(n)
-      new CellDesign(areas, n, nf + 1, Left(cs))
+      val cs = sorted.map { case (a, rowsN, c) =>
+        n(index(a)) += rowsN
+        c.map(_.copy(area = index(a)))
+      }
+      if (weight.isEmpty) checkRows(n)
+      designs(areas, n, j => Left(cs.map(_(j))), None)
     } else {
       // cache the table while it is read twice: once for the area
-      // index, once to build the cell RDD
+      // index and the null check, once to build the cell RDD
       val cached = cellsDf.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val perArea = cached.groupBy("area").agg(sum("m")).collect()
-          .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-        checkRows(perArea.map(_._2))
-        val index = perArea.map(_._1).zipWithIndex.toMap
-        val rdd = cached.rdd.map(r => toCell(r, index(r.getString(0)), nf))
+        val perArea = cached.groupBy("area").agg(sum("n"), (sum("nulls") +:
+            featureCols.map(c => count(when(col(c).isNull, 1)))): _*)
+          .collect()
+        nullCheck(perArea.iterator.map(r => (r.isNullAt(0),
+          (0 until nf).find(i => r.getLong(i + 3) > 0), r.getLong(2))))
+        val sorted = perArea.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+        if (weight.isEmpty) checkRows(sorted.map(_._2))
+        val index = sorted.map(_._1).zipWithIndex.toMap
+        val base = cached.rdd.map(r => toCells(r, index(r.getString(0)), nf, nY))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        new CellDesign(perArea.map(_._1), perArea.map(_._2), nf + 1, Right(rdd))
+        try base.count()
+        catch { case e: Throwable => base.unpersist(blocking = false); throw e }
+        designs(sorted.map(_._1), sorted.map(_._2), j => Right(base.map(_(j))), Some(base))
       } finally cached.unpersist(blocking = false)
     }
   }
@@ -133,13 +221,18 @@ private[graft] object CellDesign {
     require(n > 2, s"a cell design needs at least 3 rows, got $n")
   }
 
-  /** A `compress` row (area, features..., m, sumY) as a cell of `area`. */
-  private def toCell(r: Row, area: Int, nf: Int): Cell = {
+  /** A `compress` row (area, features..., n, nulls, m, sumY0..) as the
+    * cells of `area`, one per outcome (one with sumY = 0 if none); they
+    * share `x`.
+    */
+  private def toCells(r: Row, area: Int, nf: Int, nY: Int): Array[Cell] = {
     val x = new Array[Double](nf + 1)
     x(0) = 1.0
     var i = 0
     while (i < nf) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-    Cell(area, x, r.getLong(nf + 1).toDouble, r.getDouble(nf + 2))
+    val m = r.getDouble(nf + 3)
+    if (nY == 0) Array(Cell(area, x, m, 0.0))
+    else Array.tabulate(nY)(j => Cell(area, x, m, r.getDouble(nf + 4 + j)))
   }
 
   /** `merge` for array accumulators: adds `b` into `a`. */

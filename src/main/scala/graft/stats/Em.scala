@@ -1,12 +1,10 @@
 package graft.stats
 
 import breeze.linalg.DenseVector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import scala.util.hashing.MurmurHash3
-
-import graft.etl.Encodings
-import graft.rel.Relational
 
 /** Adjusted-likelihood EM for the logistic random-intercept model —
   * the reference's core algorithm (SURVEY.md M3-M5; `Method_code.Rmd:
@@ -178,8 +176,9 @@ object Em {
       var sumLog = 0.0; var sumP = 0.0
       var r = 0
       while (r < vs.length) {
-        sumLog += Glmm.log1pExp(eta + vs(r))
-        sumP += Glmm.sigmoidD(eta + vs(r))
+        val (l, p) = Glmm.log1pExpSigmoid(eta + vs(r))
+        sumLog += l
+        sumP += p
         r += 1
       }
       val mLog = sumLog / vs.length
@@ -240,95 +239,85 @@ object Em {
   }
 
   /** Compress a design to its distinct-covariate cell table:
-    * groupBy(area, features) -> (m = count, sumY = sum y); see
-    * [[CellDesign.compress]].
+    * groupBy(area, features) -> (n = count, nulls, m = n, sumY0 = sum y);
+    * see [[CellDesign.compress]].
     */
   def compressCells(df: DataFrame, yCol: String, featureCols: Seq[String],
                     areaCol: String): DataFrame =
-    CellDesign.compress(df, yCol, featureCols, col(areaCol))
+    CellDesign.compress(df, Seq(yCol), featureCols, col(areaCol), None)
 
   /** EBP per-area estimates (Method_code.Rmd:406-454): for each unit of
     * the big survey, posterior-mean probability = mean over the first
     * `ebpDraws` draws of sigmoid(x'beta + v~); areas without draws
     * (reference MT/SD rule, SURVEY.md Q6) score with v = 0. Then the
-    * weighted grouped mean x100.
+    * weighted mean per area, x `scale`.
     *
-    * Draw table is area-keyed (dimension-sized) → broadcast joined as an
-    * array column; the per-unit mean-over-draws runs as a higher-order
-    * `aggregate` over that array — no units-x-draws row explosion.
+    * The estimate reads the big survey only through (area, x, sum w), so
+    * `big` is reduced to its weighted [[CellDesign]] (one scan) and
+    * scored by [[scoreAreas]]: one pass over the cells, each cell's
+    * mean over draws weighted by its weight total. Returns a local
+    * DataFrame (`areaCol` as a string, `ebp`), one row per area of
+    * `big`, sorted by area. A null area, feature or weight fails,
+    * naming the column.
     */
   def ebp(big: DataFrame, params: Params, featureCols: Seq[String],
           areaCol: String, wCol: String, draws: Map[String, Array[Double]],
-          ebpDraws: Int = 100, scale: Double = 100.0): DataFrame = {
-    val spark = big.sparkSession
-    import spark.implicits._
-    val drawsDf = draws.toSeq.map { case (a, vs) => (a, vs.take(ebpDraws).toSeq) }
-      .toDF(areaCol, "draws")
-    val xb = Glmm.xBetaCol(params.beta, featureCols)
-    val p = when(col("draws").isNull, Encodings.sigmoid(xb))
-      .otherwise(
-        aggregate(col("draws"), lit(0.0),
-          (acc, v) => acc + Encodings.sigmoid(xb + v)) / size(col("draws")))
-    val scored = big.join(broadcast(drawsDf), Seq(areaCol), "left")
-      .withColumn("p", p)
-    Relational.weightedMean(scored, Seq(areaCol), col("p"),
-      col(wCol).cast("double"), scale, "ebp")
-  }
-
-  /** Hash-keyed standard-normal draw z(area, r): Box–Muller over two
-    * md5-derived uniforms, fully deterministic in (area, r, seed) —
-    * the M9 keyed-RNG machinery as a pure Column expression.
-    * 13 hex digits = 52 bits; (h + 0.5) / 2^52 lands strictly inside
-    * (0, 1), so the log can never see zero.
-    */
-  private[graft] def hashGauss(area: Column, r: Column,
-                               seed: Long): Column = {
-    def u(tag: String): Column = {
-      val key = concat(area.cast("string"), lit(":"), r.cast("string"),
-        lit(s":$seed:$tag"))
-      (conv(substring(md5(key.cast("binary")), 1, 13), 16, 10)
-        .cast("double") + lit(0.5)) / lit(4503599627370496.0)
+          ebpDraws: Int = 100, scale: Double = 100.0): DataFrame =
+    CellDesign.usingWeighted(big, wCol, featureCols, col(areaCol)) { d =>
+      val est = scoreAreas(d, Seq(params.beta -> areaDraws(d, draws, ebpDraws)),
+        scale).head
+      areaFrame(big.sparkSession, areaCol, "ebp", d.areas, est)
     }
-    sqrt(lit(-2.0) * log(u("a"))) *
-      cos(lit(2.0 * math.Pi) * u("b"))
+
+  /** `draws` aligned with `d.areas`, the first `take` of each; an area
+    * without draws gets the single draw v = 0.
+    */
+  private[graft] def areaDraws(d: CellDesign, draws: Map[String, Array[Double]],
+                               take: Int): Array[Array[Double]] = {
+    require(take > 0, s"ebpDraws must be positive, got $take")
+    d.areas.map(a => draws.get(a).fold(Array(0.0))(_.take(take)))
   }
 
-  /** EBP with ON-THE-FLY keyed-RNG draws — the same estimator as
-    * [[ebp]] behind the same shape of API, with the draw table's
-    * REPRESENTATION pivoted for true scale (SURVEY §7 hard-parts 2):
-    * instead of materializing `numDraws x |areas|` doubles on the
-    * driver and broadcasting the arrays, only the dimension-sized
-    * (area, vhat, tau) mode table travels, and each draw
-    * `v_r = vhat + tau * z(area, r)` is generated INSIDE the per-unit
-    * aggregate by the deterministic hash-keyed Box–Muller
-    * [[hashGauss]] — all codegen'd builtins, no UDF, nothing
-    * collected. When `numDraws x |areas|` outgrows memory (fine-
-    * grained area systems), this path's cost is arithmetic per row
-    * instead of broadcast bytes; the join is left to the planner, so
-    * a huge area dimension degrades gracefully to a shuffle join
-    * instead of failing to broadcast.
-    *
-    * Draws differ from [[ebp]]'s java.util.Random stream (engine-
-    * keyed RNG either way); EmSpec gates exact equality at tau = 0,
-    * MC agreement at tau > 0, determinism, and z's moments.
+  /** Weighted per-area means of mean_r sigmoid(x_c'beta + v_{a,r}), x
+    * `scale`, over a weighted design: sum_c W_c mean_r p_cr / sum_c W_c
+    * per area, for every (beta, draws aligned with `d.areas`) scoring at
+    * once in ONE [[CellDesign.aggregate]]. The EBP is one scoring; the
+    * bootstrap scores all its replicate estimates and truths together.
     */
-  def ebpKeyedDraws(big: DataFrame, params: Params,
-                    featureCols: Seq[String], areaCol: String,
-                    wCol: String, modes: DataFrame,
-                    ebpDraws: Int = 100, seed: Long = 42L,
-                    scale: Double = 100.0): DataFrame = {
-    val drawsDf = modes.select(col(areaCol),
-      transform(sequence(lit(0), lit(ebpDraws - 1)),
-        r => col("vhat") + col("tau") * hashGauss(col(areaCol), r, seed))
-        .as("draws"))
-    val xb = Glmm.xBetaCol(params.beta, featureCols)
-    val p = when(col("draws").isNull, Encodings.sigmoid(xb))
-      .otherwise(
-        aggregate(col("draws"), lit(0.0),
-          (acc, v) => acc + Encodings.sigmoid(xb + v)) / size(col("draws")))
-    val scored = big.join(drawsDf, Seq(areaCol), "left")
-      .withColumn("p", p)
-    Relational.weightedMean(scored, Seq(areaCol), col("p"),
-      col(wCol).cast("double"), scale, "ebp")
+  private[graft] def scoreAreas(d: CellDesign,
+                                scorings: Seq[(DenseVector[Double], Array[Array[Double]])],
+                                scale: Double): Seq[Array[Double]] = {
+    val nA = d.areas.length
+    val ns = scorings.length
+    val betas = scorings.map(_._1.toArray).toArray
+    val draws = scorings.map(_._2).toArray
+    val k = d.k
+    // [sum_c W_c p_c per (scoring, area) .. , sum_c W_c per area]
+    val acc = d.aggregate(new Array[Double]((ns + 1) * nA))({ (acc, c) =>
+      var s = 0
+      while (s < ns) {
+        val b = betas(s)
+        var eta = 0.0
+        var i = 0
+        while (i < k) { eta += b(i) * c.x(i); i += 1 }
+        val vs = draws(s)(c.area)
+        var sumP = 0.0
+        var r = 0
+        while (r < vs.length) { sumP += Glmm.sigmoidD(eta + vs(r)); r += 1 }
+        acc(s * nA + c.area) += c.m * (sumP / vs.length)
+        s += 1
+      }
+      acc(ns * nA + c.area) += c.m
+      acc
+    }, CellDesign.addInto)
+    (0 until ns).map(s =>
+      Array.tabulate(nA)(a => scale * acc(s * nA + a) / acc(ns * nA + a)))
   }
+
+  /** A local (area string, `name` double) DataFrame. */
+  private[stats] def areaFrame(spark: SparkSession, areaCol: String, name: String,
+                               areas: Array[String], values: Array[Double]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(areas.indices.map(a => Row(areas(a), values(a))): _*),
+      StructType(Seq(StructField(areaCol, StringType), StructField(name, DoubleType))))
 }

@@ -32,6 +32,17 @@ object Glmm {
   def sigmoidD(x: Double): Double =
     if (x >= 0) 1.0 / (1.0 + math.exp(-x)) else { val e = math.exp(x); e / (1.0 + e) }
 
+  /** ([[log1pExp]](z), [[sigmoidD]](z)) from one `exp`: on either
+    * branch both of them exponentiate -|z|, so sharing e = exp(-|z|)
+    * is bit-identical to the two calls at two transcendentals instead
+    * of three.
+    */
+  def log1pExpSigmoid(z: Double): (Double, Double) = {
+    val e = math.exp(-math.abs(z))
+    if (z > 0) (z + math.log1p(e), 1.0 / (1.0 + e))
+    else (math.log1p(e), e / (1.0 + e))
+  }
+
   /** (NLL, gradient) of logistic regression over a cell design, per
     * row: (1/n) sum_c [ m_c log1pexp(eta_c) - sumY_c eta_c ], gradient
     * (1/n) sum_c (m_c sigmoid(eta_c) - sumY_c) x_c; optional L2 ridge
@@ -47,8 +58,8 @@ object Glmm {
       var eta = 0.0
       var i = 0
       while (i < k) { eta += b(i) * c.x(i); i += 1 }
-      val p = sigmoidD(eta)
-      acc(k) += c.m * log1pExp(eta) - c.sumY * eta
+      val (l, p) = log1pExpSigmoid(eta)
+      acc(k) += c.m * l - c.sumY * eta
       i = 0
       while (i < k) { acc(i) += (c.m * p - c.sumY) * c.x(i); i += 1 }
       acc
@@ -75,8 +86,8 @@ object Glmm {
     CellDesign.using(df, yCol, featureCols, lit(""))(fitDesign(_, l2, maxIter))
 
   /** [[fitLogistic]] over an already-built design. */
-  private[graft] def fitDesign(d: CellDesign, l2: Double,
-                               maxIter: Int): DenseVector[Double] =
+  private[graft] def fitDesign(d: CellDesign, l2: Double = 1e-8,
+                               maxIter: Int = 100): DenseVector[Double] =
     Optimize.lbfgsMin(nll(d, _, l2), DenseVector.zeros[Double](d.k), maxIter)
 
   /** Linear-predictor Column from a fitted beta (intercept at index 0),

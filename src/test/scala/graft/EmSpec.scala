@@ -227,80 +227,73 @@ class EmSpec extends SparkSpec {
     assert(r(1)._2 > 20 && r(1)._2 < 80) // v=0 neutral
   }
 
-  test("hashGauss draws are standard-normal-shaped, deterministic, " +
-    "and decorrelated across areas") {
-    val n = 20000
-    val df = spark.range(n).select(lit("A01").as("area"),
-      col("id").cast("int").as("r"))
-    val z = df.select(Em.hashGauss(col("area"), col("r"), 42L).as("z"))
-    val row = z.agg(avg("z"), stddev_pop(col("z")),
-      avg(col("z") * col("z") * col("z")), max(abs(col("z")))).head()
-    assert(math.abs(row.getDouble(0)) < 0.02, s"mean ${row.getDouble(0)}")
-    assert(math.abs(row.getDouble(1) - 1.0) < 0.02,
-      s"sd ${row.getDouble(1)}")
-    assert(math.abs(row.getDouble(2)) < 0.1, s"skew ${row.getDouble(2)}")
-    assert(row.getDouble(3) < 6.0, "52-bit uniforms cannot reach 6 sigma")
-    // deterministic: same (area, r, seed) -> identical value, different
-    // seed or area -> different stream
-    val a = z.limit(5).as[Double].collect().toSeq
-    val b = df.select(Em.hashGauss(col("area"), col("r"), 42L).as("z"))
-      .limit(5).as[Double].collect().toSeq
-    assert(a == b)
-    val other = df.select(Em.hashGauss(lit("A02"), col("r"), 42L).as("z"))
-      .limit(5).as[Double].collect().toSeq
-    assert(a != other)
-    // cross-area correlation of the first n draws ~ 0 (independent
-    // streams): sample corr of two md5 streams stays tiny
-    val corr = spark.range(2000).select(
-        Em.hashGauss(lit("A01"), col("id"), 42L).as("x"),
-        Em.hashGauss(lit("A02"), col("id"), 42L).as("y"))
-      .agg(org.apache.spark.sql.functions.corr("x", "y")).head().getDouble(0)
-    assert(math.abs(corr) < 0.05, s"corr $corr")
+  test("ebp with draws matches the row-level oracle and is bit-identical " +
+      "for any partitioning") {
+    // x1 rounded: several rows per cell, so each cell's weight total is
+    // a real sum of unequal weights
+    val big = SurveyFixture.covariates(numAreas = 6, rowsPerArea = 50)
+      .withColumn("x1", round(col("x1")))
+    val params = Em.Params(DenseVector(0.2, 0.5, -0.5), 1.0)
+    val draws = (0 until 5).map(a =>
+      f"A$a%02d" -> Array.tabulate(40)(r => 0.05 * r - 1.0 + 0.1 * a)).toMap // A05 has none
+    def ebpOf(df: org.apache.spark.sql.DataFrame) =
+      Em.ebp(df, params, SurveyFixture.featureCols, "state", "weight", draws,
+        ebpDraws = 30)
+    def run(df: org.apache.spark.sql.DataFrame) =
+      ebpOf(df).as[(String, Double)].collect().toSeq
+    assert(ebpOf(big).columns.toSeq == Seq("state", "ebp"))
+    val viaCells = run(big)
+    val want = UnitOracle.ebpRows(big, params.beta, SurveyFixture.featureCols,
+      "state", "weight", draws, 30)
+    assert(viaCells.map(_._1) == want.map(_._1))
+    viaCells.zip(want).foreach { case ((a, e), (_, w)) =>
+      assert(math.abs(e - w) < 1e-9, s"$a: cells $e vs rows $w") }
+    val one = run(big.repartition(1))
+    val seven = run(big.repartition(7))
+    assert(one == seven && one == viaCells)
   }
 
-  test("ebpKeyedDraws: exact equality with the broadcast path at " +
-    "tau=0; MC agreement at tau>0; partitioning-invariant") {
-    val big = SurveyFixture.covariates(numAreas = 5, rowsPerArea = 40)
-    val params = Em.Params(DenseVector(0.2, 0.5, -0.5), 1.0)
-    val areas = (0 until 5).map(a => f"A$a%02d")
-    // tau = 0: every draw equals vhat exactly in BOTH representations,
-    // so the two paths are float-identical
-    val vhats = areas.zipWithIndex.map { case (a, i) => a -> (i * 0.3 - 0.6) }
-    val degenerate = vhats.map { case (a, v) => a -> Array.fill(7)(v) }.toMap
-    val modes0 = vhats.map { case (a, v) => (a, v, 0.0) }
-      .toDF("state", "vhat", "tau")
-    val viaBroadcast = Em.ebp(big, params, SurveyFixture.featureCols,
-      "state", "weight", degenerate, ebpDraws = 7)
-      .orderBy("state").as[(String, Double)].collect()
-    val viaKeyed = Em.ebpKeyedDraws(big, params, SurveyFixture.featureCols,
-      "state", "weight", modes0, ebpDraws = 7)
-      .orderBy("state").as[(String, Double)].collect()
-    viaBroadcast.zip(viaKeyed).foreach { case ((a1, e), (a2, k)) =>
-      assert(a1 == a2 && math.abs(e - k) < 1e-12, s"$a1: $e vs $k")
-    }
-    // tau > 0: different RNG streams, same estimator — agree within
-    // MC error at R = 400 (EBP is a smooth functional of the draw
-    // distribution; tolerance ~ few x tau/sqrt(R) on the percent scale)
-    val modes1 = areas.map(a => (a, 0.2, 0.8)).toDF("state", "vhat", "tau")
-    val drawsJava = Em.simulateDraws(
-      areas.map(a => Em.AreaMode(a, 0.2, 0.8, 40L)), 400, 7L, 0)
-    val ebpJava = Em.ebp(big, params, SurveyFixture.featureCols, "state",
-      "weight", drawsJava, ebpDraws = 400)
-      .orderBy("state").as[(String, Double)].collect()
-    val ebpKeyed = Em.ebpKeyedDraws(big, params, SurveyFixture.featureCols,
-      "state", "weight", modes1, ebpDraws = 400, seed = 7L)
-      .orderBy("state").as[(String, Double)].collect()
-    ebpJava.zip(ebpKeyed).foreach { case ((a1, e), (a2, k)) =>
-      assert(a1 == a2 && math.abs(e - k) < 1.5, s"$a1: $e vs $k")
-    }
-    // keyed draws are partitioning-invariant (hash of values, not of
-    // placement)
-    val repart = Em.ebpKeyedDraws(big.repartition(13), params,
-      SurveyFixture.featureCols, "state", "weight", modes1,
-      ebpDraws = 400, seed = 7L)
-      .orderBy("state").as[(String, Double)].collect()
-    ebpKeyed.zip(repart).foreach { case ((a1, e), (a2, k)) =>
-      assert(a1 == a2 && math.abs(e - k) < 1e-9)
+  test("ebp rejects a null feature or weight in the big survey, naming the " +
+      "column, and a non-positive draw count") {
+    val big = SurveyFixture.covariates(numAreas = 3, rowsPerArea = 10)
+    val params = Em.Params(DenseVector(0.0, 1.0, 0.0), 1.0)
+    def ebpOf(df: org.apache.spark.sql.DataFrame) = Em.ebp(df, params,
+      SurveyFixture.featureCols, "state", "weight", Map.empty, 1)
+    val nullX = big.withColumn("x2",
+      when(col("uid") === 100003L, lit(null).cast("double")).otherwise(col("x2")))
+    val e1 = intercept[IllegalArgumentException](ebpOf(nullX))
+    assert(e1.getMessage.contains("feature column 'x2'"), e1.getMessage)
+    val nullW = big.withColumn("weight",
+      when(col("uid") === 200007L, lit(null).cast("double")).otherwise(col("weight")))
+    val e2 = intercept[IllegalArgumentException](ebpOf(nullW))
+    assert(e2.getMessage.contains("'weight'"), e2.getMessage)
+    // no draw to average over: rejected, not a NaN estimate
+    val e3 = intercept[IllegalArgumentException](Em.ebp(big, params,
+      SurveyFixture.featureCols, "state", "weight", Map("A00" -> Array(0.5)), 0))
+    assert(e3.getMessage.contains("ebpDraws must be positive"), e3.getMessage)
+  }
+
+  test("a cell design rejects a null outcome, area or feature on either " +
+      "side, naming the column") {
+    val df = (1 to 12).map(i => (if (i % 2 == 0) "a" else "b", i % 3 * 1.0, 0.0, i % 2))
+      .toDF("state", "x1", "x2", "y")
+    def fails(bad: org.apache.spark.sql.DataFrame, name: String): Unit =
+      Seq(CellDesign.MaxLocalCells, 0).foreach { maxLocal =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalArgumentException](CellDesign.build(bad, "y",
+          Seq("x1", "x2"), col("state"), maxLocal))
+        assert(e.getMessage.contains(name), s"maxLocal $maxLocal: ${e.getMessage}")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+      }
+    def nullAt(c: String, t: String) = df.withColumn(c,
+      when(col("x1") === 1.0 && col("y") === 1, lit(null).cast(t)).otherwise(col(c)))
+    fails(nullAt("y", "int"), "column 'y'")
+    fails(nullAt("state", "string"), "area column 'state'")
+    fails(nullAt("x1", "double"), "feature column 'x1'")
+    // the clean frame builds on both sides
+    Seq(CellDesign.MaxLocalCells, 0).foreach { maxLocal =>
+      val d = CellDesign.build(df, "y", Seq("x1", "x2"), col("state"), maxLocal)
+      try assert(d.totalN == 12) finally d.unpersist()
     }
   }
 }

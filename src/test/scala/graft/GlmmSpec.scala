@@ -129,4 +129,17 @@ class GlmmSpec extends SparkSpec {
     assert(Glmm.log1pExp(-800.0) == 0.0)
     assert(Glmm.sigmoidD(800.0) == 1.0 && Glmm.sigmoidD(-800.0) == 0.0)
   }
+
+  test("log1pExpSigmoid equals log1pExp and sigmoidD bit for bit") {
+    val grid = Seq(0.0, -0.0, 1e-300, -1e-300, 1e-17, -1e-17, 0.5, -0.5,
+      1.0, -1.0, 3.7, -3.7, 18.0, -18.0, 40.0, -40.0, 709.0, -709.0,
+      745.2, -745.2, 800.0, -800.0, Double.MaxValue, -Double.MaxValue) ++
+      (-2000 to 2000).map(_ * 0.0137)
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    grid.foreach { z =>
+      val (l, p) = Glmm.log1pExpSigmoid(z)
+      assert(bits(l) == bits(Glmm.log1pExp(z)), s"log1pExp($z): $l vs ${Glmm.log1pExp(z)}")
+      assert(bits(p) == bits(Glmm.sigmoidD(z)), s"sigmoid($z): $p vs ${Glmm.sigmoidD(z)}")
+    }
+  }
 }

@@ -553,14 +553,24 @@ class PlanSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
-  test("m03: EBP draw join is broadcast (no shuffle of the big survey)") {
+  test("m03: EBP reads the big survey via one map-side aggregate, no join") {
+    // Em.ebp scores the weighted cell table on the driver and returns a
+    // local frame, so the cell table's plan is the only one that reads
+    // the big survey
+    val big = graft.queries.StatQueries.bigSurvey(spark, sf001)
     val fit = graft.queries.StatQueries.emFit(spark, sf001)
-    val plan = graft.stats.Em.ebp(
-      graft.queries.StatQueries.bigSurvey(spark, sf001),
-      fit.params, graft.queries.StatQueries.featureCols,
-      "state", "weight", fit.draws, 10)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    val ebp = graft.stats.Em.ebp(big, fit.params,
+      graft.queries.StatQueries.featureCols, "state", "weight", fit.draws, 10)
+    assert(ebp.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def joins(p: String) = "Join ".r.findAllIn(p).size
+    val cells = graft.stats.CellDesign.compress(big, Nil,
+      graft.queries.StatQueries.featureCols, col("state"), Some("weight"))
+    val plan = cells.queryExecution.executedPlan.toString
+    // the survey's own nation join is all there is
+    assert(joins(plan) == joins(big.queryExecution.executedPlan.toString), plan)
+    assert("partial_sum".r.findAllIn(plan).size == 1, plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
   }
 
   test("q52/q54/q57: lag+cumsum sessionization, the RANGE frame, and " +

@@ -88,6 +88,30 @@ object UnitOracle {
     (s, g)
   }
 
+  /** The row-level EBP as a Column expression, sorted by area: every
+    * row of `big` is scored as the mean over the first `ebpDraws`
+    * draws of its area of sigmoid(x'beta + v) (v = 0 for an area
+    * without draws), then 100 x sum(p w) / sum(w) per area. With one
+    * draw v_b per area it is the bootstrap's replicate truth.
+    */
+  def ebpRows(big: DataFrame, beta: DenseVector[Double],
+              featureCols: Seq[String], areaCol: String, wCol: String,
+              draws: Map[String, Array[Double]], ebpDraws: Int): Seq[(String, Double)] = {
+    val spark = big.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val drawsDf = draws.toSeq.map { case (a, vs) => (a, vs.take(ebpDraws).toSeq) }
+      .toDF(areaCol, "draws")
+    val xb = Glmm.xBetaCol(beta, featureCols)
+    val p = when(col("draws").isNull, graft.etl.Encodings.sigmoid(xb))
+      .otherwise(aggregate(col("draws"), lit(0.0),
+        (acc, v) => acc + graft.etl.Encodings.sigmoid(xb + v)) / size(col("draws")))
+    big.join(broadcast(drawsDf), Seq(areaCol), "left").withColumn("p", p)
+      .groupBy(areaCol)
+      .agg((lit(100.0) * sum(col("p") * col(wCol)) / sum(col(wCol))).as("ebp"))
+      .orderBy(areaCol).as[(String, Double)].collect().toSeq
+  }
+
   /** |a - b| within `tol` relative to max(1, |b|). */
   def close(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
