@@ -129,7 +129,7 @@ object StatQueries {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // M1 — distributed logistic fit (treeAggregate NLL + LBFGS)
+    // M1 — logistic fit (cell-design NLL + LBFGS)
     "m01_glm_fit" -> ((s, dir) => {
       import s.implicits._
       val beta = Glmm.fitLogistic(smallSurvey(s, dir), "y", featureCols)

@@ -854,43 +854,43 @@ object Versioned {
       if (crashAt.contains(point))
         throw new RuntimeException(s"injected crash at $point in compact")
     val man = manifest(s, root, fromVersion).cache()
-    val (_, delPaths) = pathsByKind(s, root, fromVersion)
-    if (delPaths.isEmpty) {
-      commitManifest(man.filter(col("kind") === "data"), root,
-        toVersion, overwrite)
-      man.unpersist(blocking = false)
-      return
-    }
-    val tombs = s.read.parquet(delPaths: _*)
-    val k = tombs.columns.head
-    val keys = tombs.select(col(k).cast("long").as("__dk")).distinct()
-    // file-count-sized broadcast join: which data files hold a deleted
-    // key (by range — a superset of the truly-affected set, which is
-    // exactly the COW rewrite granularity)
-    val affected = keys.join(
-        broadcast(man.filter(col("kind") === "data")),
-        col("__dk") >= col("min_key") && col("__dk") <= col("max_key"))
-      .select("path").distinct().collect().map(_.getString(0)).toSet
-    val untouched = man.filter(col("kind") === "data"
-      && !col("path").isin(affected.toSeq: _*))
-    val newStats =
-      if (affected.isEmpty)
-        man.filter(lit(false)).select("path", "min_key", "max_key",
-          "rows", "kind")
-      else {
-        val rewritten = applyTombstones(s,
-          s.read.option("mergeSchema", "true")
-            .parquet(affected.toSeq: _*), delPaths)
-        writeFileGroup(rewritten, root, keyCol,
-          math.max(1, affected.size))
+    try {
+      val (_, delPaths) = pathsByKind(s, root, fromVersion)
+      if (delPaths.isEmpty) {
+        commitManifest(man.filter(col("kind") === "data"), root,
+          toVersion, overwrite)
+        return
       }
-    // the rewrite group is on disk but unreferenced until the rename
-    // below — a crash here orphans it (vacuumOrphans debris), never
-    // half-commits (VersionedCrashFuzzSpec kills this point)
-    maybeCrash("pre_commit")
-    commitManifest(untouched.unionByName(newStats), root, toVersion,
-      overwrite)
-    man.unpersist(blocking = false)
+      val tombs = s.read.parquet(delPaths: _*)
+      val k = tombs.columns.head
+      val keys = tombs.select(col(k).cast("long").as("__dk")).distinct()
+      // file-count-sized broadcast join: which data files hold a deleted
+      // key (by range — a superset of the truly-affected set, which is
+      // exactly the COW rewrite granularity)
+      val affected = keys.join(
+          broadcast(man.filter(col("kind") === "data")),
+          col("__dk") >= col("min_key") && col("__dk") <= col("max_key"))
+        .select("path").distinct().collect().map(_.getString(0)).toSet
+      val untouched = man.filter(col("kind") === "data"
+        && !col("path").isin(affected.toSeq: _*))
+      val newStats =
+        if (affected.isEmpty)
+          man.filter(lit(false)).select("path", "min_key", "max_key",
+            "rows", "kind")
+        else {
+          val rewritten = applyTombstones(s,
+            s.read.option("mergeSchema", "true")
+              .parquet(affected.toSeq: _*), delPaths)
+          writeFileGroup(rewritten, root, keyCol,
+            math.max(1, affected.size))
+        }
+      // the rewrite group is on disk but unreferenced until the rename
+      // below — a crash here orphans it (vacuumOrphans debris), never
+      // half-commits (VersionedCrashFuzzSpec kills this point)
+      maybeCrash("pre_commit")
+      commitManifest(untouched.unionByName(newStats), root, toVersion,
+        overwrite)
+    } finally man.unpersist(blocking = false)
   }
 
   /** Expire old snapshots: drop every manifest older than the newest
@@ -1369,57 +1369,58 @@ object Versioned {
             overwrite: Boolean = true,
             txn: Option[(String, Long)] = None): Unit = {
     val man = manifest(s, root, fromVersion).cache()
-    require(man.filter(col("kind") === "delete").isEmpty,
-      s"merge requires a tombstone-free from-version; run compact($fromVersion) first")
-    // file-count-sized broadcast range join routes each change row to
-    // the file whose key range holds it (null = net-new key space)
-    val routed = changes.withColumn("__k", col(keyCol).cast("long"))
-      .join(broadcast(man),
-        col("__k") >= col("min_key") && col("__k") <= col("max_key"),
-        "left")
-    val affected = routed.filter(col("path").isNotNull)
-      .select("path").distinct().collect().map(_.getString(0)).toSet
-    val untouched = man.filter(!col("path").isin(affected.toSeq: _*))
-    val hasInserts = !changes.filter(col(opCol) === "U").isEmpty
-    import s.implicits._
-    val newStats =
-      if (affected.isEmpty && !hasInserts) {
-        // deletes into untouched key space: nothing to rewrite
-        Seq.empty[(String, Long, Long, Long, String)]
-          .toDF("path", "min_key", "max_key", "rows", "kind")
-      } else {
-        val base =
-          if (affected.isEmpty) {
-            // insert-only commit into net-new key space: empty base
-            // with the table's schema
-            s.read.option("mergeSchema", "true")
-              .parquet(man.select("path").first().getString(0))
-              .filter(lit(false))
-          } else s.read.option("mergeSchema", "true")
-            .parquet(affected.toSeq: _*)
-        // add-column schema evolution, BOTH directions: columns the
-        // change batch has but the base files lack read as typed
-        // nulls in the base (rewritten files land with the new
-        // schema), and columns the TABLE evolved earlier that this
-        // batch omits become typed nulls on the change side — an
-        // upserted row IS the change row in full, so an absent column
-        // is null, and later commits need not know about every past
-        // evolution (fuzz-caught: a post-evolution batch without the
-        // evolved column failed to resolve it).
-        val newCols = changes.columns
-          .filterNot(c => c == opCol || base.columns.contains(c))
-        val aligned = newCols.foldLeft(base)((b, c) =>
-          b.withColumn(c, lit(null).cast(changes.schema(c).dataType)))
-        val missingInChanges = aligned.columns
-          .filterNot(changes.columns.contains)
-        val changesAligned = missingInChanges.foldLeft(changes)((c, cn) =>
-          c.withColumn(cn, lit(null).cast(aligned.schema(cn).dataType)))
-        val merged = Relational.mergeUpsert(aligned, changesAligned,
-          keyCol, opCol)
-        writeFileGroup(merged, root, keyCol, math.max(1, affected.size))
-      }
-    commitManifest(untouched.unionByName(newStats), root, toVersion,
-      overwrite, txn = txn)
-    man.unpersist(blocking = false)
+    try {
+      require(man.filter(col("kind") === "delete").isEmpty,
+        s"merge requires a tombstone-free from-version; run compact($fromVersion) first")
+      // file-count-sized broadcast range join routes each change row to
+      // the file whose key range holds it (null = net-new key space)
+      val routed = changes.withColumn("__k", col(keyCol).cast("long"))
+        .join(broadcast(man),
+          col("__k") >= col("min_key") && col("__k") <= col("max_key"),
+          "left")
+      val affected = routed.filter(col("path").isNotNull)
+        .select("path").distinct().collect().map(_.getString(0)).toSet
+      val untouched = man.filter(!col("path").isin(affected.toSeq: _*))
+      val hasInserts = !changes.filter(col(opCol) === "U").isEmpty
+      import s.implicits._
+      val newStats =
+        if (affected.isEmpty && !hasInserts) {
+          // deletes into untouched key space: nothing to rewrite
+          Seq.empty[(String, Long, Long, Long, String)]
+            .toDF("path", "min_key", "max_key", "rows", "kind")
+        } else {
+          val base =
+            if (affected.isEmpty) {
+              // insert-only commit into net-new key space: empty base
+              // with the table's schema
+              s.read.option("mergeSchema", "true")
+                .parquet(man.select("path").first().getString(0))
+                .filter(lit(false))
+            } else s.read.option("mergeSchema", "true")
+              .parquet(affected.toSeq: _*)
+          // add-column schema evolution, BOTH directions: columns the
+          // change batch has but the base files lack read as typed
+          // nulls in the base (rewritten files land with the new
+          // schema), and columns the TABLE evolved earlier that this
+          // batch omits become typed nulls on the change side — an
+          // upserted row IS the change row in full, so an absent column
+          // is null, and later commits need not know about every past
+          // evolution (fuzz-caught: a post-evolution batch without the
+          // evolved column failed to resolve it).
+          val newCols = changes.columns
+            .filterNot(c => c == opCol || base.columns.contains(c))
+          val aligned = newCols.foldLeft(base)((b, c) =>
+            b.withColumn(c, lit(null).cast(changes.schema(c).dataType)))
+          val missingInChanges = aligned.columns
+            .filterNot(changes.columns.contains)
+          val changesAligned = missingInChanges.foldLeft(changes)((c, cn) =>
+            c.withColumn(cn, lit(null).cast(aligned.schema(cn).dataType)))
+          val merged = Relational.mergeUpsert(aligned, changesAligned,
+            keyCol, opCol)
+          writeFileGroup(merged, root, keyCol, math.max(1, affected.size))
+        }
+      commitManifest(untouched.unionByName(newStats), root, toVersion,
+        overwrite, txn = txn)
+    } finally man.unpersist(blocking = false)
   }
 }

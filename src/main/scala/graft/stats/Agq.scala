@@ -173,8 +173,8 @@ object Agq {
     * The design is collapsed to its [[CellDesign]] first (one shuffle,
     * exact — see [[Em.fit]]). A dimension-sized table runs the whole
     * quadrature fit on the driver; a larger one stays distributed, one
-    * `treeAggregate` over the cached cells per Newton pass and per
-    * L-BFGS evaluation.
+    * Spark job over the cached cells per Newton pass and per L-BFGS
+    * evaluation.
     *
     * Boundary note: when the data carry little between-area variance
     * the ML optimum sits near sigma = 0 and the log-sigma direction

@@ -68,12 +68,12 @@ object Bootstrap {
     *     sigmoid(x'beta + v_b) (Method_code.Rmd:689-696), are scored
     *     together in one pass ([[Em.scoreAreas]]).
     * So the Spark work does not grow with B. The B EM refits run on the
-    * driver, `concurrency` at a time on a thread pool (an EM over a
-    * driver-held design is single-threaded). Results are
+    * driver, `concurrency` at a time on a thread pool, and each refit's
+    * design aggregates fork onto the ForkJoin common pool. Results are
     * order-independent — every random stream is keyed by (seed,
-    * replicate, unit or area), not by execution interleaving. Returns a
-    * local DataFrame (`areaCol` as a string, `mspe`), one row per area
-    * of `big`, sorted by area.
+    * replicate, unit or area), and every sum runs in a fixed order, not
+    * in the order of execution. Returns a local DataFrame (`areaCol` as
+    * a string, `mspe`), one row per area of `big`, sorted by area.
     *
     * Per-replicate EM initialization (`initScheme`):
     *   - `"reference"` (default) — the reference's scheme
@@ -97,6 +97,9 @@ object Bootstrap {
     require(Set("reference", "refit")(initScheme),
       s"initScheme must be reference|refit, got $initScheme")
     require(numB >= 1, s"numB must be at least 1, got $numB")
+    require(numDraws >= 1, s"numDraws must be at least 1, got $numDraws")
+    require(emIters >= 1, s"emIters must be at least 1, got $emIters")
+    require(concurrency >= 1, s"concurrency must be at least 1, got $concurrency")
     val sigma = math.sqrt(truth.sigmaSq)
     val reps = 1 to numB
     CellDesign.usingWeighted(big, wCol, featureCols, col(areaCol)) { bigD =>
@@ -114,7 +117,7 @@ object Bootstrap {
           Em.fitDesign(d, init, numDraws, tol, emIters, seed + b, vBound = 3.0)
         }
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(numB, concurrency)))
+          math.min(numB, concurrency))
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         try scala.concurrent.Await.result(

@@ -1,5 +1,7 @@
 package graft.stats
 
+import java.util.concurrent.{ForkJoinTask, RecursiveTask}
+
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
@@ -27,10 +29,10 @@ import org.apache.spark.storage.StorageLevel
   * A table of at most [[CellDesign.MaxLocalCells]] cells is held on the
   * driver, sorted by (area, x) so driver-side sums do not depend on
   * partitioning or collect order; a larger one stays a cached RDD.
-  * [[aggregate]] hides which — a driver loop or a `treeAggregate` — so
-  * every kernel is written once. Designs built together (one per
-  * outcome column) share that cache; [[unpersist]] on any of them
-  * releases it for all.
+  * [[aggregate]] hides which — fixed-size chunks on a ForkJoin pool, or
+  * per-partition partials merged on the driver — so every kernel is
+  * written once. Designs built together (one per outcome column) share
+  * that cache; [[unpersist]] on any of them releases it for all.
   *
   * @param areas   distinct area keys, sorted; [[CellDesign.Cell.area]]
   *                indexes this array
@@ -47,19 +49,49 @@ private[graft] final class CellDesign private (
 
   def isLocal: Boolean = cells.isLeft
 
-  /** Fold every cell into an accumulator. `add` may update its
-    * accumulator in place; `merge` combines two partial results (used
-    * only by the distributed `treeAggregate`).
+  /** Fold every cell into an accumulator: `add` folds one cell into a
+    * partial (it may update it in place), `merge` adds its second
+    * partial into its first. `zero` is evaluated afresh for each
+    * partial.
+    *
+    * The result depends only on the cells, never on thread count or
+    * task timing, because both sides merge their partials in a fixed
+    * order:
+    *   - on the driver, the sorted cells are cut into chunks of
+    *     [[CellDesign.ChunkCells]] cells, whatever the thread count. The
+    *     chunks run as ForkJoin tasks (on the caller's pool when called
+    *     from a ForkJoin worker, else on the common pool) and merge in
+    *     chunk order; a design of one chunk runs inline on the caller.
+    *   - distributed, each partition (its cells sorted when the design
+    *     was built) folds to one partial, and the partials merge on the
+    *     driver in partition-index order. So two runs at the same
+    *     partitioning agree bit for bit; a different partition count
+    *     may change the last bits.
     */
-  def aggregate[U: ClassTag](zero: U)(add: (U, Cell) => U,
-                                      merge: (U, U) => U): U =
+  def aggregate[U: ClassTag](zero: => U)(add: (U, Cell) => U,
+                                         merge: (U, U) => U): U =
     cells match {
       case Left(cs) =>
-        var acc = zero
-        var i = 0
-        while (i < cs.length) { acc = add(acc, cs(i)); i += 1 }
-        acc
-      case Right(rdd) => rdd.treeAggregate(zero)(add, merge, depth = 2)
+        def fold(chunk: Int): U = {
+          var acc = zero
+          var i = chunk * CellDesign.ChunkCells
+          val end = math.min(cs.length, i + CellDesign.ChunkCells)
+          while (i < end) { acc = add(acc, cs(i)); i += 1 }
+          acc
+        }
+        val chunks = (cs.length + CellDesign.ChunkCells - 1) / CellDesign.ChunkCells
+        if (chunks <= 1) fold(0)
+        else {
+          val tasks = Array.tabulate(chunks)(c =>
+            new RecursiveTask[U] { def compute(): U = fold(c) })
+          ForkJoinTask.invokeAll(tasks.toSeq: _*)
+          tasks.iterator.map(_.join()).reduceLeft(merge)
+        }
+      case Right(rdd) =>
+        // each task deserializes its own copy of z
+        val z = zero
+        rdd.mapPartitions(it => Iterator.single(it.foldLeft(z)(add)))
+          .collect().reduceLeftOption(merge).getOrElse(z)
     }
 
   /** This design summed over areas: one area "" whose cells add m and
@@ -96,6 +128,20 @@ private[graft] object CellDesign {
 
   /** Largest cell table held on the driver. */
   val MaxLocalCells: Int = 1 << 16
+
+  /** Cells per chunk of a driver-side [[CellDesign.aggregate]]: a
+    * constant, so the chunks, and with them the float sums, are the
+    * same on any number of threads.
+    */
+  val ChunkCells: Int = 64
+
+  /** (area, x) order: the order the driver side holds its cells in,
+    * and each partition of the distributed side.
+    */
+  private val byAreaX: Ordering[Cell] = {
+    import scala.math.Ordering.Implicits._
+    Ordering.by((c: Cell) => (c.area, c.x.toSeq))
+  }
 
   /** The cell table of `df`: groupBy(area, features) -> (n = count,
     * nulls = rows with a null outcome or weight, m, sumY0 .. sumY{B-1}
@@ -179,16 +225,11 @@ private[graft] object CellDesign {
     if (rows.length <= maxLocal) {
       nullCheck(rows.iterator.map(r => (r.isNullAt(0),
         (0 until nf).find(i => r.isNullAt(i + 1)), r.getLong(nf + 2))))
-      import scala.math.Ordering.Implicits._
-      val sorted = rows.map(r => (r.getString(0), r.getLong(nf + 1), toCells(r, 0, nf, nY)))
-        .sortBy { case (a, _, cs) => (a, cs(0).x.toSeq) }
-      val areas = sorted.map(_._1).distinct
+      val areas = rows.map(_.getString(0)).distinct.sorted
       val index = areas.zipWithIndex.toMap
       val n = new Array[Long](areas.length)
-      val cs = sorted.map { case (a, rowsN, c) =>
-        n(index(a)) += rowsN
-        c.map(_.copy(area = index(a)))
-      }
+      rows.foreach(r => n(index(r.getString(0))) += r.getLong(nf + 1))
+      val cs = rows.map(r => toCells(r, index(r.getString(0)), nf, nY)).sortBy(_(0))(byAreaX)
       if (weight.isEmpty) checkRows(n)
       designs(areas, n, j => Left(cs.map(_(j))), None)
     } else {
@@ -204,7 +245,12 @@ private[graft] object CellDesign {
         val sorted = perArea.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
         if (weight.isEmpty) checkRows(sorted.map(_._2))
         val index = sorted.map(_._1).zipWithIndex.toMap
-        val base = cached.rdd.map(r => toCells(r, index(r.getString(0)), nf, nY))
+        // a partition's rows arrive in shuffle-fetch order: sort them as
+        // the driver side does, so each partition folds its cells in the
+        // same order every run
+        val base = cached.rdd.mapPartitions(rows =>
+            rows.map(r => toCells(r, index(r.getString(0)), nf, nY))
+              .toArray.sortBy(_(0))(byAreaX).iterator, preservesPartitioning = true)
           .persist(StorageLevel.MEMORY_AND_DISK)
         try base.count()
         catch { case e: Throwable => base.unpersist(blocking = false); throw e }

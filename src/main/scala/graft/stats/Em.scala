@@ -197,10 +197,13 @@ object Em {
     *
     * The design is first collapsed to its [[CellDesign]] (one shuffle).
     * A categorical design is dimension-sized and the whole loop then
-    * runs on the driver; a table too large for the driver stays
-    * distributed, and every Newton pass and L-BFGS evaluation becomes
-    * one `treeAggregate` over the cached cells. Fails on fewer than
-    * three rows, where the sigma^2 update has no finite value.
+    * runs on the driver, each Newton pass and L-BFGS evaluation one
+    * chunked [[CellDesign.aggregate]] over the driver's cores; a table
+    * too large for the driver stays distributed, and each of them
+    * becomes one Spark job over the cached cells. Either way the fit is
+    * the same on any number of threads. Fails on fewer than three rows,
+    * where the sigma^2 update has no finite value, and on fewer than
+    * one draw or one iteration.
     */
   def fit(df: DataFrame, yCol: String, featureCols: Seq[String],
           areaCol: String, init: Params, numDraws: Int = 1000,
@@ -213,6 +216,10 @@ object Em {
   private[graft] def fitDesign(d: CellDesign, init: Params, numDraws: Int,
                                tol: Double, maxIter: Int, seed: Long,
                                vBound: Double): Fit = {
+    // no draw makes sigma^2 and the beta objective 0/0; no iteration
+    // returns the init with no draws for the EBP to score
+    require(numDraws >= 1, s"numDraws must be at least 1, got $numDraws")
+    require(maxIter >= 1, s"maxIter must be at least 1, got $maxIter")
     val nByArea = d.areas.zip(d.nByArea).toMap
     var params = init
     var modes: Seq[AreaMode] = Nil

@@ -12,11 +12,11 @@ import graft.etl.Encodings
   *
   * The fixed-effects fit minimizes the logistic NLL with Breeze L-BFGS
   * on the driver over the data's [[CellDesign]]: each objective
-  * evaluation is one design `aggregate` — a driver loop over a
-  * dimension-sized cell table, or a `treeAggregate` over cached cells
-  * when the table is large (the mllib LogisticRegression pattern), so
-  * communication stays O(numFeatures * log(numPartitions)) and no
-  * per-row data ever reaches the driver.
+  * evaluation is one design `aggregate` — fixed-size chunks of a
+  * dimension-sized cell table on the driver's cores, or one Spark job
+  * over cached cells when the table is large (the mllib
+  * LogisticRegression pattern), returning one O(numFeatures) partial
+  * per partition, so no per-row data ever reaches the driver.
   *
   * The random-intercept SD is NOT estimated here — per the paper, the
   * engine's own EM (graft.stats.Em) replaces glmer's integral
@@ -79,7 +79,8 @@ object Glmm {
     * and L-BFGS runs over the weighted cells — exact, since y enters
     * the NLL linearly. A categorical design has few cells whatever the
     * row count and is fitted on the driver; a larger table (continuous
-    * covariates) is fitted by `treeAggregate` over the cached cells.
+    * covariates) is fitted by one Spark job per evaluation over the
+    * cached cells.
     */
   def fitLogistic(df: DataFrame, yCol: String, featureCols: Seq[String],
                   l2: Double = 1e-8, maxIter: Int = 100): DenseVector[Double] =

@@ -10,14 +10,15 @@ import breeze.optimize.{DiffFunction, LBFGS}
   * 308-310`) are the EM's safeguarded Newton Laplace solver and the
   * closed-form sigma^2 update. The reference parallelizes finite differences across
   * forked R workers; here parallelism lives *inside* the objective
-  * (a Spark action per evaluation), so the optimizer itself is plain
-  * driver code.
+  * (one [[CellDesign.aggregate]] per evaluation: chunks on the driver's
+  * cores, or a Spark job over a distributed design), so the optimizer
+  * itself is plain driver code.
   */
 object Optimize {
 
   /** Unconstrained N-D minimization via Breeze L-BFGS. `fg` returns
     * (value, gradient); when the objective is a distributed NLL, each
-    * call is one Spark `treeAggregate` action over a cached RDD.
+    * call is one Spark action over a cached RDD.
     */
   def lbfgsMin(fg: DenseVector[Double] => (Double, DenseVector[Double]),
                init: DenseVector[Double], maxIter: Int = 100,

@@ -96,6 +96,22 @@ class BootstrapSpec extends SparkSpec {
     }
   }
 
+  test("mspe rejects a draw count, EM iteration cap or concurrency below " +
+      "one, naming the parameter") {
+    val small = SurveyFixture.covariates(numAreas = 2, rowsPerArea = 10)
+    val big = SurveyFixture.covariates(numAreas = 2, rowsPerArea = 10)
+    def fails(numDraws: Int, emIters: Int, concurrency: Int, msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](
+        Bootstrap.mspe(small, big, "y", SurveyFixture.featureCols, "state",
+          "weight", Seq("uid"), SurveyFixture.truth, numB = 2, numDraws = numDraws,
+          emIters = emIters, concurrency = concurrency))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    fails(0, 2, 2, "numDraws must be at least 1, got 0")
+    fails(10, 0, 2, "emIters must be at least 1, got 0")
+    fails(10, 2, 0, "concurrency must be at least 1, got 0")
+  }
+
   /** Spark jobs started by `body`: counted by a listener, filtered by a
     * job group, and read after a marker job proves the listener bus has
     * delivered everything before it.

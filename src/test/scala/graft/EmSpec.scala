@@ -183,6 +183,37 @@ class EmSpec extends SparkSpec {
     }
   }
 
+  test("a local fit is bit-identical on a ForkJoin pool of 1 or 4 workers") {
+    val init = Em.Params(DenseVector.zeros[Double](3), 1.0)
+    def fitOn(par: Int): Em.Fit = {
+      val pool = new java.util.concurrent.ForkJoinPool(par)
+      try pool.submit(new java.util.concurrent.Callable[Em.Fit] {
+        def call(): Em.Fit = Em.fit(survey, "y", SurveyFixture.featureCols, "state",
+          init, numDraws = 100, maxIter = 3, seed = 5L)
+      }).get(300, java.util.concurrent.TimeUnit.SECONDS)
+      finally pool.shutdown()
+    }
+    val one = fitOn(1)
+    val four = fitOn(4)
+    assert(one.params.beta == four.params.beta)
+    assert(one.params.sigmaSq == four.params.sigmaSq)
+    assert(one.modes == four.modes)
+    assert(one.draws.keySet == four.draws.keySet &&
+      one.draws.forall { case (a, vs) => vs.sameElements(four.draws(a)) })
+  }
+
+  test("fit rejects a draw or iteration count below one, naming the parameter") {
+    val init = Em.Params(DenseVector.zeros[Double](3), 1.0)
+    def fails(numDraws: Int, maxIter: Int, msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](Em.fit(survey, "y",
+        SurveyFixture.featureCols, "state", init, numDraws = numDraws, maxIter = maxIter))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    fails(0, 3, "numDraws must be at least 1, got 0")
+    fails(-5, 3, "numDraws must be at least 1, got -5")
+    fails(10, 0, "maxIter must be at least 1, got 0")
+  }
+
   test("fit rejects fewer than three rows with a clear message") {
     val init = Em.Params(DenseVector.zeros[Double](3), 1.0)
     def rows(n: Int) = (1 to n).map(i => ("a", i.toDouble, 0.0, i % 2))

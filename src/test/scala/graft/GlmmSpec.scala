@@ -20,7 +20,7 @@ class GlmmSpec extends SparkSpec {
   }
 
   test("fitLogistic agrees with Spark ML LogisticRegression") {
-    // independent cross-check: the treeAggregate L-BFGS fit and
+    // independent cross-check: the cell-design L-BFGS fit and
     // spark.ml (different optimizer, different code path) must land on
     // the same MLE to fine tolerance on the same data
     import org.apache.spark.ml.classification.LogisticRegression

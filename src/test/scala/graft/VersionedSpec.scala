@@ -168,6 +168,33 @@ class VersionedSpec extends SparkSpec {
       .select("status").as[String].head() == "z")
   }
 
+  test("merge and compact release the cached manifest when they fail") {
+    val root = TempDirs.createCleanedAtExit("graft-versioned-spec-leak") + "/t"
+    Versioned.write(table(20), root, "k", version = 1, nFiles = 4)
+    Versioned.deleteMor(spark, root, "k", Seq(3L).toDF("k"), 1, 2)
+    // a cached manifest is found by any frame of the same rows
+    def cached(v: Int): Boolean = Versioned.manifest(spark, root, v).storageLevel !=
+      org.apache.spark.storage.StorageLevel.NONE
+    val up = Seq((0L, "z", 9.0, "U")).toDF("k", "status", "price", "op")
+    // merge's tombstone check throws
+    intercept[IllegalArgumentException](
+      Versioned.merge(spark, root, "k", "op", up, 2, 3))
+    assert(!cached(2), "merge left the v2 manifest cached")
+    // compact's injected crash before the commit
+    val crash = intercept[RuntimeException](Versioned.compact(spark, root, "k", 2, 3,
+      crashAt = Some("pre_commit")))
+    assert(crash.getMessage.contains("injected crash at pre_commit"))
+    assert(!cached(2), "compact left the v2 manifest cached")
+    // a commit conflict: v3 already exists
+    Versioned.compact(spark, root, "k", 2, 3)
+    intercept[Versioned.ConcurrentCommitException](
+      Versioned.merge(spark, root, "k", "op", up, 3, 3, overwrite = false))
+    assert(!cached(3), "a losing merge left the v3 manifest cached")
+    intercept[Versioned.ConcurrentCommitException](
+      Versioned.compact(spark, root, "k", 2, 3, overwrite = false))
+    assert(!cached(2), "a losing compact left the v2 manifest cached")
+  }
+
   test("add-column schema evolution: rewritten files carry the new " +
     "column, old files read as nulls, old snapshots keep the old " +
     "schema") {
