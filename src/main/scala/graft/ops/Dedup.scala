@@ -254,6 +254,12 @@ object Dedup {
     * output (empty at the default cap). Reporting is the contract:
     * a silent candidate truncation would read as "no near-dups
     * there" when the truth is "too many".
+    *
+    * Both frames come back EAGER: the pairs (and, when a cap is set,
+    * the budgeted buckets) are `localCheckpoint`ed before returning,
+    * so the signature table cached while they are computed is
+    * released on every path, failures included, and repeated calls
+    * leave nothing in the session's cache.
     */
   def minhashLshBudgeted(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, numHashes: Int = 32,
@@ -274,106 +280,110 @@ object Dedup {
       .withColumn("sig", minhashSignature(col("hs"), numHashes))
       .withColumn("sigs", transform(col("sig"), x => x.cast("string")))
       .cache()
-    // EAGER cache fill (the q58/Graph lesson): the consuming job scans
-    // this cache from THREE independent stages at once (bucket counts +
-    // both candidate-join sides) — against a COLD cache those stages
-    // race, each recomputing the full shingle+signature pipeline
-    // (profiled on p02: three concurrent 32-task stages, 25-29 s CPU
-    // EACH, for one cache's worth of work). One cheap parallel pass
-    // here fills it once; every consumer then reads warm blocks.
-    sig.count()
-    // band key = md5 over the comma-joined signature slice — engine-
-    // portable (the oracle replays it), 16 hex chars is plenty for a
-    // band bucket key
-    val bandArr = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        substring(md5(concat_ws(",",
-          slice(col("sigs"), b * rows + 1, rows)).cast("binary")), 1, 16)
-          .as("bhash"))): _*)
-    // the banded self-join shuffles (id, band, bhash) ONLY — 8 slim
-    // rows per doc. Carrying the shingle array through the band
-    // explode and the join (the old shape) duplicated every doc's
-    // full set 8x into the shuffle and g x per bucket neighbor; on a
-    // corpus with g-sized duplication clusters (boilerplate — the
-    // common case at scale) that multiplied the candidate shuffle by
-    // g * |sh| and made d07 super-linear (caught by the sf3 sweep:
-    // 30x data was ~110x wall). Sets are fetched per SURVIVING
-    // deduped candidate from the cached signature table, the d09
-    // pattern.
-    val slim = sig.select(col("id"), explode(bandArr).as("bb"))
-      .select(col("id"),
-        col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    // pre-dedup here, unlike the PPJoin callers: LSH banding already
-    // did the similarity filtering, so candidates are answer-sized
-    // (~8 band-dups per true pair, not the prefix join's ~45x
-    // redundancy) — the slim dedup shuffle is cheaper than 8 extra
-    // verifies per pair (sf3: ~21s here vs 31.7s dedup-late)
-    val emptyStats = df.sparkSession.emptyDataFrame
-      .withColumn("band", lit(0)).withColumn("bhash", lit(""))
-      .withColumn("bsz", lit(0L)).withColumn("hub", lit(0L))
-    val (cand, budgeted) =
-      if (maxBucketSize == Int.MaxValue)
-        (slim.as("a")
-          .join(slim.as("b"),
-            col("a.band") === col("b.band")
-              && col("a.bhash") === col("b.bhash")
-              && col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .dropDuplicates("id_a", "id_b"), emptyStats)
-      else {
-        // budget regime: annotate each slim row with its bucket's
-        // size and min id (one extra combinable agg + join on the
-        // same slim key — no wide data moves). A window over
-        // (band, bhash) would express the same thing in one pass but
-        // WindowExec sorts every partition even for unbounded
-        // frames; a back-to-back A/B measured it slightly SLOWER
-        // than this agg+join (p01 17.1 vs 16.5 s, same host window).
-        // Whole budget regime costs ~7% of p01 vs the uncapped path.
-        val stats = slim.groupBy("band", "bhash")
-          .agg(count(lit(1)).as("bsz"), min(col("id")).as("hub"))
-        val sized = slim.join(stats, Seq("band", "bhash"))
-        val small = sized.filter(col("bsz") <= maxBucketSize)
-        val allPairs = small.as("a")
-          .join(small.as("b"),
-            col("a.band") === col("b.band")
-              && col("a.bhash") === col("b.bhash")
-              && col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        val star = sized
-          .filter(col("bsz") > maxBucketSize && col("id") > col("hub"))
-          .select(col("hub").as("id_a"), col("id").as("id_b"))
-        (allPairs.unionByName(star).dropDuplicates("id_a", "id_b"),
-          stats.filter(col("bsz") > maxBucketSize))
-      }
-    // exact verify on 64-bit-hashed SORTED sets through the
-    // SortedIntersect merge kernel (the d09 verify shape — one
-    // branch-predictable scan per pair instead of a per-row string
-    // hash set). Jaccard on hashed sets equals Jaccard on the string
-    // sets unless two distinct shingles of the same pair collide in
-    // 64 bits (~1e-16/pair) — the oracle computes on raw strings, so
-    // the gate would catch it.
-    graft.functions.SortedIntersect.register(df.sparkSession)
-    val sets = sig.select(col("id"),
-      sort_array(transform(col("sh"), s => xxhash64(s))).as("sh"))
-    // size probe answered from the CACHED sig (set length is the same
-    // before and after hashing) so the hash+sort projection above
-    // isn't recomputed just to decide the regime; cand is distinct,
-    // so attachSets skips its shuffle-regime dedup and no trailing
-    // dedup is needed (1:1 joins can't re-duplicate a distinct pair)
-    val st = sig.agg(count(lit(1)).as("n"), avg(size(col("sh"))).as("s"))
-      .first
-    val pairs = attachSets(cand, sets, "id_a", "id_b", preDeduped = true,
-        preStats = Some((st.getLong(0),
-          if (st.isNullAt(1)) 0.0 else st.getDouble(1))))
-      .withColumn("inter",
-        size(graft.functions.SortedIntersect
-          .intersectFast(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    (pairs, budgeted)
+    try {
+      // EAGER cache fill (the q58/Graph lesson): the consuming job scans
+      // this cache from THREE independent stages at once (bucket counts +
+      // both candidate-join sides) — against a COLD cache those stages
+      // race, each recomputing the full shingle+signature pipeline
+      // (profiled on p02: three concurrent 32-task stages, 25-29 s CPU
+      // EACH, for one cache's worth of work). The pass that fills it
+      // also answers attachSets' size probe (row count and mean set
+      // length; set length is the same before and after hashing), so
+      // the hash+sort projection of `sets` below isn't recomputed just
+      // to decide the regime.
+      val st = sig.agg(count(lit(1)).as("n"), avg(size(col("sh"))).as("s"))
+        .first
+      // band key = md5 over the comma-joined signature slice — engine-
+      // portable (the oracle replays it), 16 hex chars is plenty for a
+      // band bucket key
+      val bandArr = array((0 until bands).map(b =>
+        struct(lit(b).as("band"),
+          substring(md5(concat_ws(",",
+            slice(col("sigs"), b * rows + 1, rows)).cast("binary")), 1, 16)
+            .as("bhash"))): _*)
+      // the banded self-join shuffles (id, band, bhash) ONLY — 8 slim
+      // rows per doc. Carrying the shingle array through the band
+      // explode and the join (the old shape) duplicated every doc's
+      // full set 8x into the shuffle and g x per bucket neighbor; on a
+      // corpus with g-sized duplication clusters (boilerplate — the
+      // common case at scale) that multiplied the candidate shuffle by
+      // g * |sh| and made d07 super-linear (caught by the sf3 sweep:
+      // 30x data was ~110x wall). Sets are fetched per SURVIVING
+      // deduped candidate from the cached signature table, the d09
+      // pattern.
+      val slim = sig.select(col("id"), explode(bandArr).as("bb"))
+        .select(col("id"),
+          col("bb.band").as("band"), col("bb.bhash").as("bhash"))
+      // pre-dedup here, unlike the PPJoin callers: LSH banding already
+      // did the similarity filtering, so candidates are answer-sized
+      // (~8 band-dups per true pair, not the prefix join's ~45x
+      // redundancy) — the slim dedup shuffle is cheaper than 8 extra
+      // verifies per pair (sf3: ~21s here vs 31.7s dedup-late)
+      val emptyStats = df.sparkSession.emptyDataFrame
+        .withColumn("band", lit(0)).withColumn("bhash", lit(""))
+        .withColumn("bsz", lit(0L)).withColumn("hub", lit(0L))
+      val (cand, budgeted) =
+        if (maxBucketSize == Int.MaxValue)
+          (slim.as("a")
+            .join(slim.as("b"),
+              col("a.band") === col("b.band")
+                && col("a.bhash") === col("b.bhash")
+                && col("a.id") < col("b.id"))
+            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+            .dropDuplicates("id_a", "id_b"), emptyStats)
+        else {
+          // budget regime: annotate each slim row with its bucket's
+          // size and min id (one extra combinable agg + join on the
+          // same slim key — no wide data moves). A window over
+          // (band, bhash) would express the same thing in one pass but
+          // WindowExec sorts every partition even for unbounded
+          // frames; a back-to-back A/B measured it slightly SLOWER
+          // than this agg+join (p01 17.1 vs 16.5 s, same host window).
+          // Whole budget regime costs ~7% of p01 vs the uncapped path.
+          val stats = slim.groupBy("band", "bhash")
+            .agg(count(lit(1)).as("bsz"), min(col("id")).as("hub"))
+          val sized = slim.join(stats, Seq("band", "bhash"))
+          val small = sized.filter(col("bsz") <= maxBucketSize)
+          val allPairs = small.as("a")
+            .join(small.as("b"),
+              col("a.band") === col("b.band")
+                && col("a.bhash") === col("b.bhash")
+                && col("a.id") < col("b.id"))
+            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+          val star = sized
+            .filter(col("bsz") > maxBucketSize && col("id") > col("hub"))
+            .select(col("hub").as("id_a"), col("id").as("id_b"))
+          (allPairs.unionByName(star).dropDuplicates("id_a", "id_b"),
+            stats.filter(col("bsz") > maxBucketSize))
+        }
+      // exact verify on 64-bit-hashed SORTED sets through the
+      // SortedIntersect merge kernel (the d09 verify shape — one
+      // branch-predictable scan per pair instead of a per-row string
+      // hash set). Jaccard on hashed sets equals Jaccard on the string
+      // sets unless two distinct shingles of the same pair collide in
+      // 64 bits (~1e-16/pair) — the oracle computes on raw strings, so
+      // the gate would catch it.
+      graft.functions.SortedIntersect.register(df.sparkSession)
+      val sets = sig.select(col("id"),
+        sort_array(transform(col("sh"), s => xxhash64(s))).as("sh"))
+      // cand is distinct, so attachSets skips its shuffle-regime dedup
+      // and no trailing dedup is needed (1:1 joins can't re-duplicate a
+      // distinct pair)
+      val pairs = attachSets(cand, sets, "id_a", "id_b", preDeduped = true,
+          preStats = Some((st.getLong(0),
+            if (st.isNullAt(1)) 0.0 else st.getDouble(1))))
+        .withColumn("inter",
+          size(graft.functions.SortedIntersect
+            .intersectFast(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard",
+          col("inter").cast("double") /
+            (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+      (pairs.localCheckpoint(true),
+        if (maxBucketSize == Int.MaxValue) budgeted
+        else budgeted.localCheckpoint(true))
+    } finally sig.unpersist()
   }
 
   /** Banded MinHash signature table for one corpus side: (id, sig,
@@ -846,10 +856,14 @@ object Dedup {
   /** Connected components over a near-duplicate PAIR list — the
     * "pairs → clusters" closure every real dedup pipeline needs before
     * it can pick one keeper per group (pairs alone can't: near-dup is
-    * not transitive, clusters are). Delegates to the shared
-    * large-star/small-star kernel [[Graph.connectedComponents]] —
-    * ONE audited O(log n)-round implementation serves both the dedup
-    * closure (d15/d25) and the graph family (q84).
+    * not transitive, clusters are). Delegates to
+    * [[Graph.connectedComponents]], which serves both the dedup
+    * closure (d15/d25) and the graph family (q84): a pair list of at
+    * most [[Graph.MaxLocalEdges]] distinct edges is closed by
+    * union-find on the driver from one bounded collect and comes back
+    * as a local DataFrame sorted by `id`; a longer one runs the
+    * O(log n)-round large-star/small-star kernel. Both sides give
+    * each node its component's minimum id.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame =

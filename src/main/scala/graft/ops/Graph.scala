@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed graph analytics over plain edge DataFrames — the
   * iterative-join family next to [[Dedup.connectedComponents]].
@@ -301,15 +304,33 @@ object Graph {
     visited
   }
 
+  /** Pair lists of at most this many distinct non-self-loop edges are
+    * closed on the driver by [[connectedComponents]]; 2^18 edges are
+    * 4 MB of longs.
+    */
+  val MaxLocalEdges: Int = 1 << 18
+
   /** Connected components over an undirected edge list `(aCol, bCol)`
     * of long node ids — labels every node with its component's minimum
-    * id. THE shared implementation for both the graph family (q84)
-    * and the dedup cluster closure ([[Dedup.connectedComponents]]
-    * delegates here), so one audited kernel serves both.
+    * id, as `(id, comp)`. Rows with a null endpoint and self-loops are
+    * dropped, so a node appears only if it has an edge to another node.
+    * THE shared implementation for both the graph family (q84) and the
+    * dedup cluster closure ([[Dedup.connectedComponents]] delegates
+    * here), so one audited kernel serves both.
     *
-    * Algorithm: alternating large-star/small-star contraction (the
-    * MapReduce-CC scheme from the public literature — Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14):
+    * One bounded collect of the distinct edges decides the side, the
+    * [[graft.stats.CellDesign]] rule: up to [[MaxLocalEdges]] edges are
+    * closed by union-find on the driver, and the labels come back as a
+    * local DataFrame sorted by `id` (one scan of the pair plan, two
+    * Spark jobs on small inputs, however long the chains). Above the
+    * bound the distributed kernel below runs on the same distinct
+    * edges, local-checkpointed by that collect, so the pair plan is
+    * evaluated once on either side. Both sides return the same schema
+    * and the same labels.
+    *
+    * Distributed kernel: alternating large-star/small-star contraction
+    * (the MapReduce-CC scheme from the public literature — Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC'14):
     *   large-star: per node u over its full neighborhood Γ(u), attach
     *     every neighbor v > u to m = min(Γ(u) ∪ {u});
     *   small-star: per node u over its SMALLER neighbors, attach them
@@ -320,25 +341,71 @@ object Graph {
     * can't starve the iteration cap (DedupSpec proves a 200-node path
     * converges in ≤ a dozen rounds).
     *
-    * Hygiene at scale: the incoming pair pipeline is materialized
-    * exactly ONCE (eager `localCheckpoint` — the old symmetrize-then-
-    * cache shape evaluated the un-cached pair plan once per union
-    * branch); every round is `localCheckpoint`ed too, which TRUNCATES
-    * the logical plan — with plain `.cache()` each round's plan embeds
-    * two copies of the previous round's (caching doesn't cut lineage),
-    * so planning cost doubles per round and a 15-round run spends
-    * forever in Catalyst before touching data. Checkpoint blocks are
-    * freed by the ContextCleaner when unreferenced, so nothing leaks
-    * into the session's cache registry and callers get a lineage-free
-    * result. Convergence is a cheap (count, hash-sum) fingerprint per
-    * round; hitting `maxIter` without a fixpoint warns loudly on
+    * Hygiene at scale: the distinct edges are `localCheckpoint`ed,
+    * and every round is too (eagerly), which TRUNCATES the logical plan
+    * — with plain `.cache()` each round's plan embeds two copies of the
+    * previous round's (caching doesn't cut lineage), so planning cost
+    * doubles per round and a 15-round run spends forever in Catalyst
+    * before touching data. Checkpoint blocks are freed by the
+    * ContextCleaner when unreferenced, so nothing leaks into the
+    * session's cache registry and callers get a lineage-free result.
+    * Convergence is a cheap (count, hash-sum) fingerprint per round;
+    * hitting `maxIter` (at least 1) without a fixpoint warns loudly on
     * stderr instead of silently returning partial clusters.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20): DataFrame = {
-    val eIn = pairs.select(col(aCol).cast("long").as("a"),
-      col(bCol).cast("long").as("b"))
+                          maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, MaxLocalEdges)
+
+  /** [[connectedComponents]] closing at most `maxLocal` edges on the
+    * driver; tests pass 0 to run the distributed kernel on small data.
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, aCol: String,
+                                         bCol: String, maxIter: Int,
+                                         maxLocal: Int): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be at least 1, got $maxIter")
+    // a lazy local checkpoint: the bounded collect fills it, and the
+    // distributed side reads it instead of re-running the pair plan
+    val edges = pairs.select(col(aCol).cast("long").as("a"),
+        col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint(false)
+    val local = edges.limit(maxLocal + 1).collect()
+    if (local.length <= maxLocal) unionFind(pairs.sparkSession, local)
+    else starForest(edges, maxIter)
+  }
+
+  private val LabelSchema = StructType(Seq(
+    StructField("id", LongType), StructField("comp", LongType)))
+
+  /** Min-id labels of the components of the `(a, b)` edge rows. Node
+    * indices follow the sorted ids and every union keeps the smaller
+    * root, so each root is its component's minimum.
+    */
+  private def unionFind(s: SparkSession, edges: Array[Row]): DataFrame = {
+    val ids = edges.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+      .sorted.distinct
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, id))
+    edges.foreach { r =>
+      val (ra, rb) = (root(r.getLong(0)), root(r.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    s.createDataFrame(
+      ids.indices.map(i => Row(ids(i), ids(find(i)))).asJava, LabelSchema)
+  }
+
+  /** The large-star/small-star rounds over checkpointed distinct edges
+    * `(a, b)`, then the star forest as `(id, comp)` labels.
+    */
+  private def starForest(distinctEdges: DataFrame,
+                         maxIter: Int): DataFrame = {
     // one (count, order-invariant hash-sum) pass over a cached round =
     // the convergence check; a star forest is a fixpoint of both
     // phases, so equality of the edge multiset means convergence (the
@@ -385,9 +452,7 @@ object Graph {
         .filter(col("a") =!= col("b"))
         .distinct()
     }
-    // eager checkpoint = the (expensive) upstream pair pipeline runs
-    // exactly once, and each round starts from a flat LogicalRDD
-    var edges = eIn.distinct().localCheckpoint(true)
+    var edges = distinctEdges
     var fp = fingerprint(edges)
     var it = 0
     var converged = false

@@ -400,8 +400,7 @@ object PipelineQueries {
       val (pairs, budget) = Dedup.minhashLshBudgeted(corpus, "doc_id",
         "text", shingleN = 3, numHashes = 32, bands = 8,
         threshold = 0.5, maxBucketSize = SkewTestCap)
-      val pairsC = pairs.cache()
-      val comps = Dedup.connectedComponents(pairsC, "id_a", "id_b")
+      val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .groupBy("comp").agg(count(lit(1)).as("n")).cache()
       def metric(ord: Int, name: String, v: org.apache.spark.sql.Column,
                  src: DataFrame): DataFrame =
@@ -411,7 +410,7 @@ object PipelineQueries {
       metric(1, "budgeted_buckets", count(lit(1)), budget)
         .unionByName(metric(2, "budgeted_memberships",
           coalesce(sum("bsz"), lit(0L)), budget))
-        .unionByName(metric(3, "verified_pairs", count(lit(1)), pairsC))
+        .unionByName(metric(3, "verified_pairs", count(lit(1)), pairs))
         .unionByName(metric(4, "components", count(lit(1)), comps))
         .unionByName(metric(5, "max_component",
           coalesce(max("n"), lit(0L)), comps))

@@ -112,33 +112,6 @@ class BootstrapSpec extends SparkSpec {
     fails(10, 2, 0, "concurrency must be at least 1, got 0")
   }
 
-  /** Spark jobs started by `body`: counted by a listener, filtered by a
-    * job group, and read after a marker job proves the listener bus has
-    * delivered everything before it.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains(group + "-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains(group + "-marker"), "listener bus did not drain")
-      started.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("mspe runs the same number of Spark jobs for any B") {
     val small = SurveyFixture.covariates(numAreas = 6, rowsPerArea = 40)
     val big = SurveyFixture.covariates(numAreas = 6, rowsPerArea = 60)

@@ -94,12 +94,12 @@ class DedupSpec extends SparkSpec {
     // components: {1,2,3,7} via chain 1-2, 2-3, 3-7; {10,11}; {20,21}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 7L), (10L, 11L), (21L, 20L))
       .toDF("id_a", "id_b")
-    for (parts <- Seq(1, 4)) {
-      val r = Dedup.connectedComponents(pairs.repartition(parts),
-          "id_a", "id_b")
+    for ((side, cc) <- GraphSpec.ccSides; parts <- Seq(1, 4)) {
+      val r = cc(pairs.repartition(parts), "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
       assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
-        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L), s"parts=$parts $r")
+        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L),
+        s"$side parts=$parts $r")
     }
   }
 
@@ -127,10 +127,12 @@ class DedupSpec extends SparkSpec {
         }
         val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
         val expected = nodes.map(v => v -> find(v.toInt).toLong).toMap
-        val got = Dedup.connectedComponents(
-            edges.toDF("id_a", "id_b").repartition(3), "id_a", "id_b")
-          .as[(Long, Long)].collect().toMap
-        assert(got == expected, s"trial=$trial edges=$edges")
+        for ((side, cc) <- GraphSpec.ccSides) {
+          val got = cc(edges.toDF("id_a", "id_b").repartition(3),
+              "id_a", "id_b")
+            .as[(Long, Long)].collect().toMap
+          assert(got == expected, s"$side trial=$trial edges=$edges")
+        }
       }
     }
   }
@@ -142,10 +144,75 @@ class DedupSpec extends SparkSpec {
     val n = 200
     val chain = (0 until n - 1).map(i => (i.toLong + 1000L, i.toLong + 1001L))
       .toDF("id_a", "id_b")
-    val r = Dedup.connectedComponents(chain.repartition(8), "id_a", "id_b")
-      .as[(Long, Long)].collect()
-    assert(r.length == n, s"expected one label per node, got ${r.length}")
-    assert(r.forall(_._2 == 1000L), s"all labels must be the chain min")
+    for ((side, cc) <- GraphSpec.ccSides) {
+      val r = cc(chain.repartition(8), "id_a", "id_b")
+        .as[(Long, Long)].collect()
+      assert(r.length == n,
+        s"$side: expected one label per node, got ${r.length}")
+      assert(r.forall(_._2 == 1000L), s"$side: all labels must be the chain min")
+    }
+  }
+
+  test("connectedComponents closes a 10-pair list in at most 2 Spark jobs") {
+    // the driver side is one bounded collect; the distributed kernel
+    // runs two fingerprint jobs plus checkpoints per round
+    val pairs = ((1L to 5L).map(i => (i, i + 1)) ++
+      (20L to 24L).map(i => (i + 1, i))).toDF("id_a", "id_b").cache()
+    try {
+      pairs.count()
+      var labels = Map.empty[Long, Long]
+      val jobs = jobsOf {
+        labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
+          .as[(Long, Long)].collect().toMap
+      }
+      assert(jobs <= 2, s"$jobs Spark jobs")
+      assert(labels == ((1L to 6L).map(_ -> 1L) ++
+        (20L to 25L).map(_ -> 20L)).toMap, s"$labels")
+    } finally pairs.unpersist()
+  }
+
+  /** Word-bigram Jaccard pairs of [[corpus]] at `threshold`: the
+    * all-pairs answer that LSH candidates plus exact verify reproduce.
+    */
+  private def naiveBigramPairs(threshold: Double): Set[(Long, Long)] = {
+    val docs = corpus.as[(Long, String)].collect().toSeq
+    def shingles(t: String) = t.trim.split("\\s+").sliding(2)
+      .map(_.mkString(" ")).toSet
+    (for {
+      (a, ta) <- docs; (b, tb) <- docs if a < b
+      (sa, sb) = (shingles(ta), shingles(tb))
+      if (sa & sb).size.toDouble / (sa | sb).size >= threshold
+    } yield (a, b)).toSet
+  }
+
+  test("minhashLshBudgeted releases its signature cache, with and " +
+    "without a bucket budget") {
+    // the returned frames are local checkpoints, whose blocks the
+    // ContextCleaner frees with the frames: every other RDD the call
+    // persisted must be gone when it returns
+    val sc = spark.sparkContext
+    val expected = naiveBigramPairs(0.5)
+    assert(expected == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"$expected")
+    for (cap <- Seq(Int.MaxValue, 1)) {
+      val before = sc.getPersistentRDDs.keySet
+      val (p, budgeted) = Dedup.minhashLshBudgeted(corpus, "id", "text",
+        shingleN = 2, numHashes = 32, bands = 16, threshold = 0.5,
+        maxBucketSize = cap)
+      val pairs = p.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val nBudgeted = budgeted.count()
+      val leaked = (sc.getPersistentRDDs -- before).filterNot(_._2.isCheckpointed)
+      assert(leaked.isEmpty, s"cap=$cap left persisted RDDs $leaked")
+      if (cap == Int.MaxValue) {
+        assert(pairs == expected, s"$pairs")
+        assert(nBudgeted == 0)
+      } else {
+        // every oversized bucket becomes a star on its min id, so the
+        // pairs with doc 1 (the cluster's min) survive the budget
+        assert(pairs.subsetOf(expected) &&
+          Set((1L, 2L), (1L, 3L)).subsetOf(pairs), s"$pairs")
+        assert(nBudgeted > 0)
+      }
+    }
   }
 
   test("prefix filtering is candidate-complete vs the naive all-pairs join") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
@@ -181,12 +182,10 @@ class GraphSpec extends SparkSpec {
       Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 4L), (7L, 8L), (2L, 1L))
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
       4L -> 4L, 5L -> 4L, 7L -> 7L, 8L -> 7L)
-    for (parts <- Seq(1, 7)) {
-      val got = Graph
-        .connectedComponents(
-          pairs.toDF("a", "b").repartition(parts), "a", "b")
+    for ((side, cc) <- GraphSpec.ccSides; parts <- Seq(1, 7)) {
+      val got = cc(pairs.toDF("a", "b").repartition(parts), "a", "b")
         .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"parts=$parts: $got")
+      assert(got == expected, s"$side parts=$parts: $got")
     }
   }
 
@@ -196,12 +195,59 @@ class GraphSpec extends SparkSpec {
     // bridge 20-31 merges them into one component with min 10
     val pairs = ((11L to 20L).map(v => (10L, v)) ++
       (31L to 40L).map(v => (30L, v)) :+ ((20L, 31L))).toDF("a", "b")
-    val viaGraph = Graph.connectedComponents(pairs, "a", "b")
-      .as[(Long, Long)].collect().toMap
     val viaDedup = graft.ops.Dedup.connectedComponents(pairs, "a", "b")
       .as[(Long, Long)].collect().toMap
-    assert(viaGraph.values.toSet == Set(10L))
-    assert(viaGraph.keySet == ((10L to 20L) ++ (30L to 40L)).toSet)
-    assert(viaGraph == viaDedup)
+    for ((side, cc) <- GraphSpec.ccSides) {
+      val viaGraph = cc(pairs, "a", "b").as[(Long, Long)].collect().toMap
+      assert(viaGraph.values.toSet == Set(10L), side)
+      assert(viaGraph.keySet == ((10L to 20L) ++ (30L to 40L)).toSet, side)
+      assert(viaGraph == viaDedup, side)
+    }
   }
+
+  test("connectedComponents rejects maxIter below one, naming maxIter") {
+    val pairs = Seq((1L, 2L)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](
+      Graph.connectedComponents(pairs, "a", "b", maxIter = 0))
+    assert(e.getMessage.contains("maxIter must be at least 1, got 0"),
+      e.getMessage)
+  }
+
+  test("connectedComponents: both sides return the same schema and drop " +
+    "rows with a null endpoint") {
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(3L)), (None, None), (Some(4L), Some(4L)))
+      .toDF("a", "b")
+    val sides = GraphSpec.ccSides.map { case (side, cc) =>
+      side -> cc(pairs, "a", "b") }
+    val schemas = sides.map(_._2.schema).distinct
+    assert(schemas.size == 1, s"${sides.map(s => s._1 -> s._2.schema)}")
+    assert(schemas.head.fieldNames.toSeq == Seq("id", "comp"))
+    for ((side, labels) <- sides)
+      assert(labels.as[(Long, Long)].collect().toSet ==
+        Set((1L, 1L), (2L, 1L)), side)
+  }
+
+  test("connectedComponents takes the distributed side above the bound") {
+    // three distinct edges: a bound of 3 closes them on the driver (a
+    // local result), a bound of 2 runs the distributed kernel
+    val pairs = Seq((1L, 2L), (2L, 3L), (2L, 3L), (8L, 7L)).toDF("a", "b")
+    val local = Graph.connectedComponents(pairs, "a", "b", 20, 3)
+    val dist = Graph.connectedComponents(pairs, "a", "b", 20, 2)
+    def fromDriver(df: DataFrame): Boolean =
+      df.queryExecution.logical.collectLeaves().forall(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(fromDriver(local))
+    assert(!fromDriver(dist))
+    assert(local.collect().toSeq == dist.orderBy("id").collect().toSeq)
+  }
+}
+
+object GraphSpec {
+  /** Connected components on each side of the driver bound: the public
+    * call (the driver side, at test sizes) and bound 0 (distributed).
+    */
+  val ccSides: Seq[(String, (DataFrame, String, String) => DataFrame)] =
+    Seq("driver" -> ((p, a, b) => Graph.connectedComponents(p, a, b)),
+      "distributed" -> ((p, a, b) => Graph.connectedComponents(p, a, b, 20, 0)))
 }
