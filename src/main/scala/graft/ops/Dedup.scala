@@ -444,7 +444,8 @@ object Dedup {
     * expression), candidates from matching any of `tables` 16-bit
     * sub-bands (pigeonhole: <= `maxHamming` differing bits guarantees a
     * clean band when maxHamming < tables), verified by Hamming distance
-    * via builtin bit ops.
+    * via builtin bit ops. The pairs come back EAGER, as a local
+    * checkpoint, so the cached signatures are released on every path.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, tables: Int = 4,
@@ -453,7 +454,8 @@ object Dedup {
     val sigs = df.select(col(idCol).as("id"),
         SimHash64.simhash64(TextAnalysis.tokens(col(textCol))).as("sig"))
       .cache()
-    hammingBandPairs(sigs, maxHamming, tables, maxBucket)
+    try hammingBandPairs(sigs, maxHamming, tables, maxBucket).localCheckpoint(true)
+    finally sigs.unpersist()
   }
 
   /** Banded Hamming near-dup pairs over any 64-bit signature table
@@ -526,6 +528,9 @@ object Dedup {
     * is the budgeted LSH ([[minhashLshBudgeted]]) + closure, which
     * handles the same corpus in minutes. Green at sf1/sf3 where the
     * output fits (rounds 8-9).
+    *
+    * The pairs come back EAGER, as a local checkpoint, so the cached
+    * shingle sets are released on every path, failures included.
     */
   def ngramJaccardJoin(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
@@ -549,68 +554,71 @@ object Dedup {
         sort_array(transform(col("shs"), s => xxhash64(s))).as("sh"))
       .withColumn("setSize", size(col("sh")))
       .cache()
-    val inv = sh.select(col("id"), col("setSize"),
-        explode(col("sh")).as("shingle"))
-    val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("dfreq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("dfreq"), col("shingle"))
-    // Float-safety: both bounds below compare an integer against a
-    // real-valued product. A double product that rounds 1 ulp ABOVE an
-    // exact integer would (via ceil) shorten the prefix / over-tighten
-    // the overlap bound and silently drop boundary true pairs (e.g.
-    // thresholds like 0.3 where t*|A| lands on an integer). Nudging
-    // each product DOWN by eps makes the boundary inclusive: at worst
-    // a few extra candidates survive, and the exact verify stage
-    // removes them — completeness is never at risk.
-    val eps = 1e-9
-    val pre = inv.join(dfreq, Seq("shingle"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <=
-        col("setSize") - ceil(col("setSize") * threshold - eps) + 1)
-      .select("id", "shingle", "rn", "setSize")
-    // positional filter (PPJoin): at the earliest common prefix shingle
-    // (position p in A, q in B) the overlap is at most
-    // 1 + min(|A|-p, |B|-q); prune pairs that can't reach the overlap
-    // a Jaccard >= t requires, I >= ceil(t/(1+t) * (|A|+|B|)). True
-    // pairs always pass at their earliest common shingle, so this cuts
-    // candidates without losing completeness. (bound+1 is an integer,
-    // so int >= ceil(x) <=> int >= x; comparing against x - eps
-    // directly skips the ceil and its rounding hazard.)
-    //
-    // Duplication note, measured at the sf3 stress (30x sf0.1): under
-    // g-fold near-duplication the prefix shingles of a g-sized
-    // cluster all carry dfreq ~ g, so the prefix join emits ~g²
-    // candidates per base pair — 107.6M candidates at 150k docs. That
-    // is IRREDUCIBLE for an exact join (the true-pair output itself
-    // is g²-sized); what must not happen is each of those candidates
-    // dragging its two shingle arrays through a shuffle, which is why
-    // the verify below goes through [[attachSets]] (slim 16-byte
-    // pairs shuffle; arrays ride a broadcast while the corpus-linear
-    // sets table fits, shuffle joins beyond). A prefix-GROUP collapse
-    // (dedupe docs by identical prefix set before the join) was tried
-    // here and measured a no-op: each generated near-dup carries a
-    // few globally-unique mutated shingles that sort to the FRONT of
-    // its df-ascending prefix, so 149,760 of 150,000 prefix sets were
-    // distinct — real mutation-style duplication defeats it.
-    val overlapFrac = threshold / (1 + threshold)
-    val cand = pre.as("a")
-      .join(pre.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .filter(
-        least(col("a.setSize") - col("a.rn"), col("b.setSize") - col("b.rn"))
-          + 1 >= (col("a.setSize") + col("b.setSize")) * overlapFrac - eps)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    graft.functions.SortedIntersect.register(df.sparkSession)
-    attachSets(cand, sh.select(col("id"), col("sh")), "id_a", "id_b")
-      .withColumn("inter",
-        size(graft.functions.SortedIntersect
-          .intersectFast(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .dropDuplicates("id_a", "id_b")
+    try {
+      val inv = sh.select(col("id"), col("setSize"),
+          explode(col("sh")).as("shingle"))
+      val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("dfreq"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("id").orderBy(col("dfreq"), col("shingle"))
+      // Float-safety: both bounds below compare an integer against a
+      // real-valued product. A double product that rounds 1 ulp ABOVE an
+      // exact integer would (via ceil) shorten the prefix / over-tighten
+      // the overlap bound and silently drop boundary true pairs (e.g.
+      // thresholds like 0.3 where t*|A| lands on an integer). Nudging
+      // each product DOWN by eps makes the boundary inclusive: at worst
+      // a few extra candidates survive, and the exact verify stage
+      // removes them — completeness is never at risk.
+      val eps = 1e-9
+      val pre = inv.join(dfreq, Seq("shingle"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <=
+          col("setSize") - ceil(col("setSize") * threshold - eps) + 1)
+        .select("id", "shingle", "rn", "setSize")
+      // positional filter (PPJoin): at the earliest common prefix shingle
+      // (position p in A, q in B) the overlap is at most
+      // 1 + min(|A|-p, |B|-q); prune pairs that can't reach the overlap
+      // a Jaccard >= t requires, I >= ceil(t/(1+t) * (|A|+|B|)). True
+      // pairs always pass at their earliest common shingle, so this cuts
+      // candidates without losing completeness. (bound+1 is an integer,
+      // so int >= ceil(x) <=> int >= x; comparing against x - eps
+      // directly skips the ceil and its rounding hazard.)
+      //
+      // Duplication note, measured at the sf3 stress (30x sf0.1): under
+      // g-fold near-duplication the prefix shingles of a g-sized
+      // cluster all carry dfreq ~ g, so the prefix join emits ~g²
+      // candidates per base pair — 107.6M candidates at 150k docs. That
+      // is IRREDUCIBLE for an exact join (the true-pair output itself
+      // is g²-sized); what must not happen is each of those candidates
+      // dragging its two shingle arrays through a shuffle, which is why
+      // the verify below goes through [[attachSets]] (slim 16-byte
+      // pairs shuffle; arrays ride a broadcast while the corpus-linear
+      // sets table fits, shuffle joins beyond). A prefix-GROUP collapse
+      // (dedupe docs by identical prefix set before the join) was tried
+      // here and measured a no-op: each generated near-dup carries a
+      // few globally-unique mutated shingles that sort to the FRONT of
+      // its df-ascending prefix, so 149,760 of 150,000 prefix sets were
+      // distinct — real mutation-style duplication defeats it.
+      val overlapFrac = threshold / (1 + threshold)
+      val cand = pre.as("a")
+        .join(pre.as("b"),
+          col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
+        .filter(
+          least(col("a.setSize") - col("a.rn"), col("b.setSize") - col("b.rn"))
+            + 1 >= (col("a.setSize") + col("b.setSize")) * overlapFrac - eps)
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      graft.functions.SortedIntersect.register(df.sparkSession)
+      attachSets(cand, sh.select(col("id"), col("sh")), "id_a", "id_b")
+        .withColumn("inter",
+          size(graft.functions.SortedIntersect
+            .intersectFast(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard",
+          col("inter").cast("double") /
+            (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+        .dropDuplicates("id_a", "id_b")
+        .localCheckpoint(true)
+    } finally sh.unpersist()
   }
 
   /** Asymmetric CONTAINMENT join: pairs (a, b) where at least
@@ -631,7 +639,8 @@ object Dedup {
     * positional filter prunes candidates that can't reach the required
     * overlap; exact verification on the hashed sets makes the result
     * identical to the naive all-pairs join (oracle-gated as d26). Same
-    * eps-nudged float-safe bounds as [[ngramJaccardJoin]].
+    * eps-nudged float-safe bounds as [[ngramJaccardJoin]], and the same
+    * eager, checkpointed result.
     */
   def containmentJoin(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
@@ -646,38 +655,41 @@ object Dedup {
         sort_array(transform(col("shs"), s => xxhash64(s))).as("sh"))
       .withColumn("setSize", size(col("sh")))
       .cache()
-    val inv = sh.select(col("id"), col("setSize"),
-      explode(col("sh")).as("shingle"))
-    val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("dfreq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("dfreq"), col("shingle"))
-    val ranked = inv.join(dfreq, Seq("shingle"))
-      .withColumn("rn", row_number().over(w))
-      .select("id", "shingle", "rn", "setSize")
-    val eps = 1e-9
-    val pre = ranked.filter(col("rn") <=
-      col("setSize") - ceil(col("setSize") * threshold - eps) + 1)
-    // overlap needed: I >= ceil(t*|A|); at the earliest common shingle
-    // (rank p in A, q in B) at most 1 + min(|A|-p, |B|-q) overlap
-    // remains — true pairs always pass there (int >= ceil(x) <=>
-    // int >= x, compared against x - eps to dodge the rounding hazard)
-    val cand = pre.as("a")
-      .join(ranked.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
-      .filter(
-        least(col("a.setSize") - col("a.rn"), col("b.setSize") - col("b.rn"))
-          + 1 >= col("a.setSize") * threshold - eps)
-      .select(col("a.id").as("id_in"), col("b.id").as("id_of"))
-    graft.functions.SortedIntersect.register(df.sparkSession)
-    attachSets(cand, sh.select(col("id"), col("sh")), "id_in", "id_of")
-      .withColumn("inter",
-        size(graft.functions.SortedIntersect
-          .intersectFast(col("sh_a"), col("sh_b"))))
-      .withColumn("containment",
-        col("inter").cast("double") / size(col("sh_a")))
-      .filter(col("containment") >= threshold)
-      .select("id_in", "id_of", "containment")
-      .dropDuplicates("id_in", "id_of")
+    try {
+      val inv = sh.select(col("id"), col("setSize"),
+        explode(col("sh")).as("shingle"))
+      val dfreq = inv.groupBy("shingle").agg(count(lit(1)).as("dfreq"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("id").orderBy(col("dfreq"), col("shingle"))
+      val ranked = inv.join(dfreq, Seq("shingle"))
+        .withColumn("rn", row_number().over(w))
+        .select("id", "shingle", "rn", "setSize")
+      val eps = 1e-9
+      val pre = ranked.filter(col("rn") <=
+        col("setSize") - ceil(col("setSize") * threshold - eps) + 1)
+      // overlap needed: I >= ceil(t*|A|); at the earliest common shingle
+      // (rank p in A, q in B) at most 1 + min(|A|-p, |B|-q) overlap
+      // remains — true pairs always pass there (int >= ceil(x) <=>
+      // int >= x, compared against x - eps to dodge the rounding hazard)
+      val cand = pre.as("a")
+        .join(ranked.as("b"),
+          col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
+        .filter(
+          least(col("a.setSize") - col("a.rn"), col("b.setSize") - col("b.rn"))
+            + 1 >= col("a.setSize") * threshold - eps)
+        .select(col("a.id").as("id_in"), col("b.id").as("id_of"))
+      graft.functions.SortedIntersect.register(df.sparkSession)
+      attachSets(cand, sh.select(col("id"), col("sh")), "id_in", "id_of")
+        .withColumn("inter",
+          size(graft.functions.SortedIntersect
+            .intersectFast(col("sh_a"), col("sh_b"))))
+        .withColumn("containment",
+          col("inter").cast("double") / size(col("sh_a")))
+        .filter(col("containment") >= threshold)
+        .select("id_in", "id_of", "containment")
+        .dropDuplicates("id_in", "id_of")
+        .localCheckpoint(true)
+    } finally sh.unpersist()
   }
 
   /** C4-style span-level dedup (Raffel et al. 2020, arXiv:1910.10683
@@ -721,7 +733,9 @@ object Dedup {
     * excluded (a null string matches nothing, by policy — stated here
     * rather than inherited from join null semantics). Hash-collision
     * note: a 64-bit key collision only ever ADDS a candidate, which
-    * the exact verify then drops — never a lost pair.
+    * the exact verify then drops — never a lost pair. The pairs come
+    * back EAGER, as a local checkpoint, so the two cached tables are
+    * released on every path.
     */
   def editDistance1Join(df: DataFrame, idCol: String,
                         strCol: String): DataFrame = {
@@ -750,33 +764,38 @@ object Dedup {
             .otherwise(array().cast("array<string>"))))).as("v"))
       .select(col("s"), xxhash64(col("v")).as("k"))
       .cache() // feeds BOTH join sides — halves the variant generation
-    val a = keyed.select(col("k"), col("s").as("a_s"))
-    val b = keyed.select(col("k"), col("s").as("b_s"))
-    // verify BEFORE distinct, with the THRESHOLDED levenshtein (banded
-    // O(len * k) DP, -1 past the bound — ~10x the full-matrix form on
-    // long-ish strings), so the distinct shuffle carries only the
-    // surviving (a_s, b_s, dist) string pairs — never the unverified
-    // candidate multiset. Distinct strings differ, so dist here is
-    // exactly 1; dist-0 pairs are the identical-string groups below.
-    val strPairs = a.join(b, Seq("k"))
-      .filter(col("a_s") < col("b_s"))
-      .withColumn("dist", levenshtein(col("a_s"), col("b_s"), 1))
-      .filter(col("dist") >= 0)
-      .select("a_s", "b_s", "dist").distinct()
-    // expansion to id pairs: dist-1 string pairs fan out to their id
-    // groups (disjoint groups — normalize by id order), and identical
-    // strings pair all their ids at dist 0
-    val inter = strPairs
-      .join(rows.select(col("s").as("a_s"), col("id").as("x")), Seq("a_s"))
-      .join(rows.select(col("s").as("b_s"), col("id").as("y")), Seq("b_s"))
-      .select(least(col("x"), col("y")).as("a_id"),
-        greatest(col("x"), col("y")).as("b_id"), col("dist"))
-    val intra = rows.select(col("s"), col("id").as("x"))
-      .join(rows.select(col("s"), col("id").as("y")), Seq("s"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("a_id"), col("y").as("b_id"),
-        lit(0).as("dist"))
-    inter.unionByName(intra)
+    try {
+      val a = keyed.select(col("k"), col("s").as("a_s"))
+      val b = keyed.select(col("k"), col("s").as("b_s"))
+      // verify BEFORE distinct, with the THRESHOLDED levenshtein (banded
+      // O(len * k) DP, -1 past the bound — ~10x the full-matrix form on
+      // long-ish strings), so the distinct shuffle carries only the
+      // surviving (a_s, b_s, dist) string pairs — never the unverified
+      // candidate multiset. Distinct strings differ, so dist here is
+      // exactly 1; dist-0 pairs are the identical-string groups below.
+      val strPairs = a.join(b, Seq("k"))
+        .filter(col("a_s") < col("b_s"))
+        .withColumn("dist", levenshtein(col("a_s"), col("b_s"), 1))
+        .filter(col("dist") >= 0)
+        .select("a_s", "b_s", "dist").distinct()
+      // expansion to id pairs: dist-1 string pairs fan out to their id
+      // groups (disjoint groups — normalize by id order), and identical
+      // strings pair all their ids at dist 0
+      val inter = strPairs
+        .join(rows.select(col("s").as("a_s"), col("id").as("x")), Seq("a_s"))
+        .join(rows.select(col("s").as("b_s"), col("id").as("y")), Seq("b_s"))
+        .select(least(col("x"), col("y")).as("a_id"),
+          greatest(col("x"), col("y")).as("b_id"), col("dist"))
+      val intra = rows.select(col("s"), col("id").as("x"))
+        .join(rows.select(col("s"), col("id").as("y")), Seq("s"))
+        .filter(col("x") < col("y"))
+        .select(col("x").as("a_id"), col("y").as("b_id"),
+          lit(0).as("dist"))
+      inter.unionByName(intra).localCheckpoint(true)
+    } finally {
+      keyed.unpersist()
+      rows.unpersist()
+    }
   }
 
   def chunkDedup(df: DataFrame, idCol: String, textCol: String,

@@ -547,16 +547,19 @@ object StatQueries {
     // driver over the 5 x 25 (segment, nation) cells of one groupBy,
     // and the factors join back once, broadcast; the data never
     // shuffles. Oracle replays all six passes unrolled, row by row.
+    // Rake rejects a target category with no sample rows, so the
+    // targets keep the categories the subsample has (all of them at
+    // sf0.01; sf0.001's subsample lacks two nations).
     "m12_raking" -> ((s, dir) => {
       val full = graft.Tables(s, dir, "customer")
       val samp = full.filter(col("c_custkey") % 3 === 0)
         .select(col("c_custkey"), col("c_mktsegment").as("seg"),
           col("c_nationkey").as("nat"), lit(1.0).as("w"))
-      val st = full.groupBy(col("c_mktsegment").as("seg"))
+      def target(c: String, as: String) = full.groupBy(col(c).as(as))
         .agg(count(lit(1)).cast("double").as("_target"))
-      val nt = full.groupBy(col("c_nationkey").as("nat"))
-        .agg(count(lit(1)).cast("double").as("_target"))
-      Survey.rake(samp, "w", Seq("seg" -> st, "nat" -> nt), iters = 3)
+        .join(samp.select(as), Seq(as), "left_semi")
+      Survey.rake(samp, "w", Seq("seg" -> target("c_mktsegment", "seg"),
+          "nat" -> target("c_nationkey", "nat")), iters = 3)
         .groupBy("seg", "nat")
         .agg(round(sum("w"), 4).as("wsum"), count(lit(1)).as("n"))
         .orderBy("seg", "nat")

@@ -170,7 +170,7 @@ object Agq {
     * a prior sigma guess is the natural initializer, mirroring the
     * reference's glmer-then-EM ordering).
     *
-    * The design is collapsed to its [[CellDesign]] first (one shuffle,
+    * The design is collapsed to its [[CellDesign]] first (one scan,
     * exact — see [[Em.fit]]). A dimension-sized table runs the whole
     * quadrature fit on the driver; a larger one stays distributed, one
     * Spark job over the cached cells per Newton pass and per L-BFGS

@@ -2,10 +2,12 @@ package graft.stats
 
 import java.util.concurrent.{ForkJoinTask, RecursiveTask}
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
@@ -23,12 +25,16 @@ import org.apache.spark.storage.StorageLevel
   * weighted mean of f(eta_j) is sum_c W_c f(eta_c) / sum_c W_c. For
   * categorical designs (the reference's model: area x two binary
   * indicators) the table is dimension-sized whatever the row count, so
-  * ONE map-side-combining shuffle replaces a pass over the rows per
-  * objective evaluation.
+  * ONE scan of the rows replaces a pass over them per objective
+  * evaluation.
   *
+  * That scan is one Spark job ([[CellDesign.buildAll]]): each partition
+  * folds its rows into a partial cell table, and the partials merge
+  * exactly (integer counts, decimal weight totals, outcomes restricted
+  * to 0/1), so the table does not depend on partitioning or task order.
   * A table of at most [[CellDesign.MaxLocalCells]] cells is held on the
-  * driver, sorted by (area, x) so driver-side sums do not depend on
-  * partitioning or collect order; a larger one stays a cached RDD.
+  * driver, sorted by (area, x); a larger one is rebuilt by
+  * [[CellDesign.compress]]'s groupBy and stays a cached RDD.
   * [[aggregate]] hides which — fixed-size chunks on a ForkJoin pool, or
   * per-partition partials merged on the driver — so every kernel is
   * written once. Designs built together (one per outcome column) share
@@ -143,9 +149,9 @@ private[graft] object CellDesign {
     Ordering.by((c: Cell) => (c.area, c.x.toSeq))
   }
 
-  /** The cell table of `df`: groupBy(area, features) -> (n = count,
-    * nulls = rows with a null outcome or weight, m, sumY0 .. sumY{B-1}
-    * = sum of each `yCols` column). m is n, or the cell's weight total
+  /** The cell table of `df` as a DataFrame, the distributed side's
+    * source: groupBy(area, features) -> (n = count, m,
+    * sumY0 .. sumY{B-1} = sum of each `yCols` column). m is n, or the cell's weight total
     * when `weight` is given; weights are summed as decimal(38, 18) so the
     * total is exact and does not depend on partitioning. The output is
     * bounded by the covariate-cell cardinality, not the row count.
@@ -153,13 +159,10 @@ private[graft] object CellDesign {
   private[graft] def compress(df: DataFrame, yCols: Seq[String],
                               featureCols: Seq[String], area: Column,
                               weight: Option[String]): DataFrame = {
-    val anyNull = (weight.toSeq ++ yCols).map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
     val m = weight.fold(count(lit(1)))(w => sum(col(w).cast(DecimalType(38, 18))))
     df.groupBy((area.cast("string").as("area") +:
         featureCols.map(c => col(c).cast("double").as(c))): _*)
-      .agg(count(lit(1)).as("n"), (Seq(count(when(anyNull, 1)).as("nulls"),
-        m.cast("double").as("m")) ++
+      .agg(count(lit(1)).as("n"), (m.cast("double").as("m") +:
         yCols.zipWithIndex.map { case (y, j) =>
           sum(col(y).cast("double")).as(s"sumY$j") }): _*)
   }
@@ -191,16 +194,30 @@ private[graft] object CellDesign {
             area: Column, maxLocal: Int): CellDesign =
     buildAll(df, Seq(yCol), featureCols, area, None, maxLocal).head
 
-  /** One design of `df` per outcome in `yCols`, all from ONE groupBy:
-    * they share the cells and m and differ only in sumY. With no
-    * outcome there is one design, with sumY = 0 (a weighted design to
-    * score on). The designs are held on the driver iff the table has at
-    * most `maxLocal` cells. Fits pass [[MaxLocalCells]]; tests pass
-    * other bounds to force either side on small data. Release them with
-    * [[CellDesign.unpersist]].
+  /** One design of `df` per outcome in `yCols`: they share the cells
+    * and m and differ only in sumY. With no outcome there is one
+    * design, with sumY = 0 (a weighted design to score on). Release
+    * them with [[CellDesign.unpersist]].
     *
-    * A null area, feature, outcome or weight fails here, naming the
-    * column: each would otherwise drop or miscount rows silently. An
+    * ONE Spark job: each partition folds its rows (cast as
+    * [[compress]] casts them) into a cell table keyed by (area, x), and
+    * `treeAggregate` merges the tables (on the driver; over more than
+    * five partitions, a first merge level runs on the executors). Every
+    * sum in them is exact — row counts as longs, weights as
+    * decimal(38, 18), outcomes as integer counts of 1s — so the merged
+    * table, and the design built from it, do not depend on the
+    * partition count or on the order in which tasks finish. A table of
+    * at most `maxLocal` cells becomes the driver-held design, its cells
+    * sorted by (area, x). A larger one (a partial table stops adding
+    * cells once it passes the bound) falls back to [[compress]]'s
+    * groupBy and becomes a cached cell RDD. Fits pass
+    * [[MaxLocalCells]]; tests pass other bounds to force either side
+    * on small data.
+    *
+    * The scan checks every row on either side, and fails here naming
+    * the column: a null area, feature, outcome or weight, each of which
+    * would otherwise drop or miscount rows silently, and an outcome
+    * other than 0 or 1, for which a logistic design has no meaning. An
     * outcome design needs at least three rows.
     */
   def buildAll(df: DataFrame, yCols: Seq[String], featureCols: Seq[String],
@@ -208,41 +225,46 @@ private[graft] object CellDesign {
                maxLocal: Int): IndexedSeq[CellDesign] = {
     val nf = featureCols.length
     val nY = yCols.length
-    def nullCheck(found: Iterator[(Boolean, Option[Int], Long)]): Unit =
-      found.foreach { case (areaNull, feature, nulls) =>
-        feature.foreach(i => throw new IllegalArgumentException(
-          s"null values in feature column '${featureCols(i)}'"))
-        require(!areaNull, s"null values in area column '$area'")
-        require(nulls == 0,
-          s"null values in column ${(weight.toSeq ++ yCols).mkString("'", "' or '", "'")}")
-      }
     def designs(areas: Array[String], n: Array[Long],
                 cells: Int => Either[Array[Cell], RDD[Cell]],
                 cache: Option[RDD[_]]): IndexedSeq[CellDesign] =
       (0 until math.max(1, nY)).map(j => new CellDesign(areas, n, nf + 1, cells(j), cache))
-    val cellsDf = compress(df, yCols, featureCols, area, weight)
-    val rows = cellsDf.limit(maxLocal + 1).collect()
-    if (rows.length <= maxLocal) {
-      nullCheck(rows.iterator.map(r => (r.isNullAt(0),
-        (0 until nf).find(i => r.isNullAt(i + 1)), r.getLong(nf + 2))))
-      val areas = rows.map(_.getString(0)).distinct.sorted
+    val scan = df.select((area.cast("string") +: featureCols.map(col(_).cast("double"))) ++
+        weight.map(col(_).cast(DecimalType(38, 18))) ++
+        yCols.map(col(_).cast("double")): _*)
+      .queryExecution.toRdd
+    val zero = new Partial(nf, nY, weight.isDefined, maxLocal)
+    val table = scan.treeAggregate(zero)(_.add(_), _.merge(_))
+    val bad = table.bad.indexOf(true)
+    require(bad < 0,
+      if (bad < nf) s"null values in feature column '${featureCols(bad)}'"
+      else if (bad == nf) s"null values in area column '$area'"
+      else if (bad == nf + 1)
+        s"null values in column ${(weight.toSeq ++ yCols).mkString("'", "' or '", "'")}"
+      else s"outcome column '${yCols(bad - nf - 2)}' has values other than 0 and 1")
+    if (!table.overflow) {
+      val entries = table.cells.entrySet.asScala.toArray
+      val areas = entries.map(_.getKey.area).distinct.sorted
       val index = areas.zipWithIndex.toMap
       val n = new Array[Long](areas.length)
-      rows.foreach(r => n(index(r.getString(0))) += r.getLong(nf + 1))
-      val cs = rows.map(r => toCells(r, index(r.getString(0)), nf, nY)).sortBy(_(0))(byAreaX)
+      entries.foreach(e => n(index(e.getKey.area)) += e.getValue.n)
+      val cs = entries.map { e =>
+        val (key, s) = (e.getKey, e.getValue)
+        val a = index(key.area)
+        val m = if (weight.isDefined) s.w.doubleValue else s.n.toDouble
+        if (nY == 0) Array(Cell(a, key.x, m, 0.0))
+        else Array.tabulate(nY)(j => Cell(a, key.x, m, s.sumY(j).toDouble))
+      }.sortBy(_(0))(byAreaX)
       if (weight.isEmpty) checkRows(n)
       designs(areas, n, j => Left(cs.map(_(j))), None)
     } else {
       // cache the table while it is read twice: once for the area
-      // index and the null check, once to build the cell RDD
-      val cached = cellsDf.persist(StorageLevel.MEMORY_AND_DISK)
+      // index, once to build the cell RDD
+      val cached = compress(df, yCols, featureCols, area, weight)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val perArea = cached.groupBy("area").agg(sum("n"), (sum("nulls") +:
-            featureCols.map(c => count(when(col(c).isNull, 1)))): _*)
-          .collect()
-        nullCheck(perArea.iterator.map(r => (r.isNullAt(0),
-          (0 until nf).find(i => r.getLong(i + 3) > 0), r.getLong(2))))
-        val sorted = perArea.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+        val sorted = cached.groupBy("area").agg(sum("n")).collect()
+          .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
         if (weight.isEmpty) checkRows(sorted.map(_._2))
         val index = sorted.map(_._1).zipWithIndex.toMap
         // a partition's rows arrive in shuffle-fetch order: sort them as
@@ -259,6 +281,102 @@ private[graft] object CellDesign {
     }
   }
 
+  /** An (area, x) cell key. `x` holds the intercept and the features,
+    * with -0.0 and every NaN normalised as Spark's grouping does, and
+    * is compared by value.
+    */
+  private final class Key(val area: String, val x: Array[Double]) extends Serializable {
+    override def hashCode: Int = area.hashCode * 31 + java.util.Arrays.hashCode(x)
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => area == k.area && java.util.Arrays.equals(x, k.x)
+      case _ => false
+    }
+  }
+
+  /** One cell's exact sums: its rows, its weight total (a weighted
+    * design) and, per outcome, its rows with y = 1.
+    */
+  private final class Sums(nY: Int) extends Serializable {
+    var n = 0L
+    var w: java.math.BigDecimal = java.math.BigDecimal.ZERO
+    val sumY = new Array[Long](nY)
+
+    def add(o: Sums): Unit = {
+      n += o.n
+      w = w.add(o.w)
+      for (j <- 0 until nY) sumY(j) += o.sumY(j)
+    }
+  }
+
+  /** The cell table of some partitions of a [[buildAll]] projection
+    * (area, features..., [weight], outcomes...), plus what its rows
+    * break, flagged in `bad` in the order [[buildAll]] reports it: a
+    * null in each feature, the area, or the weight or an outcome, then
+    * each outcome other than 0 or 1. Past `maxLocal` cells it drops its
+    * cells and only overflows, but keeps checking rows, so the checks
+    * hold on both sides.
+    */
+  private final class Partial(nf: Int, nY: Int, weighted: Boolean, maxLocal: Int)
+      extends Serializable {
+    val cells = new java.util.HashMap[Key, Sums]()
+    var overflow = false
+    val bad = new Array[Boolean](nf + 2 + nY)
+
+    private def flag(i: Int): Boolean = { bad(i) = true; false }
+
+    def add(r: InternalRow): Partial = {
+      var ok = !r.isNullAt(0) || flag(nf)
+      val x = new Array[Double](nf + 1)
+      x(0) = 1.0
+      var i = 0
+      while (i < nf) {
+        if (r.isNullAt(i + 1)) ok = flag(i)
+        else {
+          val v = r.getDouble(i + 1)
+          x(i + 1) = if (v == 0.0) 0.0 else if (v.isNaN) Double.NaN else v
+        }
+        i += 1
+      }
+      val y0 = nf + 1 + (if (weighted) 1 else 0)
+      if (weighted && r.isNullAt(nf + 1)) ok = flag(nf + 1)
+      var j = 0
+      while (j < nY) {
+        if (r.isNullAt(y0 + j)) ok = flag(nf + 1)
+        else if (r.getDouble(y0 + j) != 0.0 && r.getDouble(y0 + j) != 1.0)
+          ok = flag(nf + 2 + j)
+        j += 1
+      }
+      if (ok && !overflow) {
+        val s = cells.computeIfAbsent(new Key(r.getUTF8String(0).toString, x),
+          _ => new Sums(nY))
+        s.n += 1
+        if (weighted) s.w = s.w.add(r.getDecimal(nf + 1, 38, 18).toJavaBigDecimal)
+        j = 0
+        while (j < nY) { if (r.getDouble(y0 + j) == 1.0) s.sumY(j) += 1; j += 1 }
+        checkBound()
+      }
+      this
+    }
+
+    /** Adds `o` into this table: exact, so in any order. */
+    def merge(o: Partial): Partial = {
+      for (i <- bad.indices) bad(i) ||= o.bad(i)
+      overflow ||= o.overflow
+      if (overflow) cells.clear()
+      else o.cells.forEach { (k, v) =>
+        if (!overflow) {
+          val s = cells.putIfAbsent(k, v)
+          if (s != null) s.add(v)
+          checkBound()
+        }
+      }
+      this
+    }
+
+    private def checkBound(): Unit =
+      if (cells.size > maxLocal) { overflow = true; cells.clear() }
+  }
+
   /** The EM's sigma^2 update divides by n - 2 (see [[Em.updateSigmaSq]]),
     * so fewer than three rows have no finite estimate.
     */
@@ -267,7 +385,7 @@ private[graft] object CellDesign {
     require(n > 2, s"a cell design needs at least 3 rows, got $n")
   }
 
-  /** A `compress` row (area, features..., n, nulls, m, sumY0..) as the
+  /** A `compress` row (area, features..., n, m, sumY0..) as the
     * cells of `area`, one per outcome (one with sumY = 0 if none); they
     * share `x`.
     */
@@ -276,9 +394,9 @@ private[graft] object CellDesign {
     x(0) = 1.0
     var i = 0
     while (i < nf) { x(i + 1) = r.getDouble(i + 1); i += 1 }
-    val m = r.getDouble(nf + 3)
+    val m = r.getDouble(nf + 2)
     if (nY == 0) Array(Cell(area, x, m, 0.0))
-    else Array.tabulate(nY)(j => Cell(area, x, m, r.getDouble(nf + 4 + j)))
+    else Array.tabulate(nY)(j => Cell(area, x, m, r.getDouble(nf + 3 + j)))
   }
 
   /** `merge` for array accumulators: adds `b` into `a`. */

@@ -10,7 +10,7 @@ import scala.util.hashing.MurmurHash3
   * the reference's core algorithm (SURVEY.md M3-M5; `Method_code.Rmd:
   * 215-454`, paper arXiv:2305.12336).
   *
-  * The data enter only through their [[CellDesign]] (one shuffle).
+  * The data enter only through their [[CellDesign]] (one scan).
   * Per EM iteration:
   *   1. per-area Laplace mode/curvature — safeguarded Newton root-find
   *      of g'(v), one design `aggregate` per Newton step over all areas
@@ -195,7 +195,7 @@ object Em {
   /** Outer EM loop (Method_code.Rmd:352-390): iterate to convergence,
     * tol on sigma and on every beta coordinate (reference tol = 0.01).
     *
-    * The design is first collapsed to its [[CellDesign]] (one shuffle).
+    * The design is first collapsed to its [[CellDesign]] (one scan).
     * A categorical design is dimension-sized and the whole loop then
     * runs on the driver, each Newton pass and L-BFGS evaluation one
     * chunked [[CellDesign.aggregate]] over the driver's cores; a table
@@ -246,7 +246,7 @@ object Em {
   }
 
   /** Compress a design to its distinct-covariate cell table:
-    * groupBy(area, features) -> (n = count, nulls, m = n, sumY0 = sum y);
+    * groupBy(area, features) -> (n = count, m = n, sumY0 = sum y);
     * see [[CellDesign.compress]].
     */
   def compressCells(df: DataFrame, yCol: String, featureCols: Seq[String],

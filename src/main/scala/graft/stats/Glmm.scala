@@ -75,7 +75,7 @@ object Glmm {
     * at index 0 (feature order = featureCols).
     *
     * The design is collapsed to its distinct-covariate cells with one
-    * constant area ([[CellDesign]]: one map-side-combining shuffle),
+    * constant area ([[CellDesign]]: one scan),
     * and L-BFGS runs over the weighted cells — exact, since y enters
     * the NLL linearly. A categorical design has few cells whatever the
     * row count and is fitted on the driver; a larger table (continuous

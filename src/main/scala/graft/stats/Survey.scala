@@ -47,8 +47,9 @@ object Survey {
     * The call is EAGER: it runs that one collect before it returns. The
     * cell table may hold at most [[CellDesign.MaxLocalCells]] cells.
     * Rejected, naming the margin column and category: a null category
-    * in `df`, a category of `df` with no target, a category listed
-    * twice in one target table, a target that is not > 0. The result
+    * in `df`, a category of `df` with no target, a target category
+    * with no rows in `df`, a category listed twice in one target table,
+    * a target that is not > 0. The result
     * keeps `df`'s columns in their order.
     */
   def rake(df: DataFrame, weightCol: String,
@@ -89,6 +90,14 @@ object Survey {
         s"rake: margin column '${keys(i)}' has a null category in df")
       require(targets(i).contains(r.get(i)),
         s"rake: margin '${keys(i)}' has no target for category '${r.get(i)}'")
+    }
+    // survey::postStratify's "Some strata absent from sample": raking
+    // could never reach such a category's target
+    for (i <- keys.indices) {
+      val seen = cellRows.iterator.map(_.get(i)).toSet
+      val empty = targets(i).keys.filterNot(seen).map(String.valueOf).toSeq.sorted
+      require(empty.isEmpty, s"rake: margin '${keys(i)}' has a target for " +
+        s"category ${empty.mkString("'", "', '", "'")} with no rows in df")
     }
 
     def key(r: Row): Seq[Any] = (0 until nk).map(r.get)

@@ -92,6 +92,114 @@ class CellDesignSpec extends SparkSpec {
         assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(a)), s"$a vs $b") }
     }
   }
+
+  /** 240 rows over 4 areas and 2 categorical features (x1 has -0.0,
+    * which groups with 0.0), fractional weights whose decimal totals a
+    * double sum would round, and three 0/1 outcomes.
+    */
+  private lazy val rows = {
+    val s = spark
+    import s.implicits._
+    (0 until 240).map { i =>
+      (s"a${i % 4}", Seq(-0.0, 0.0, 1.5, 2.0)(i % 7 % 4), (i / 4 % 3).toDouble,
+        0.1 + (i % 11) / 3.0, i % 2, i / 3 % 2, (i * 7) % 5 / 4)
+    }.toDF("state", "x1", "x2", "w", "y1", "y2", "y3")
+  }
+  private val xs = Seq("x1", "x2")
+
+  /** A design's cells as (area, x, m, sumY), in its order, with every
+    * double as its bits.
+    */
+  private def bitsOf(d: CellDesign) =
+    d.aggregate(Vector.empty[(Int, Seq[Long], Long, Long)])((acc, c) =>
+      acc :+ ((c.area, c.x.toSeq.map(java.lang.Double.doubleToRawLongBits),
+        java.lang.Double.doubleToRawLongBits(c.m),
+        java.lang.Double.doubleToRawLongBits(c.sumY))), _ ++ _)
+      .map { case (a, x, m, y) => (d.areas(a), x, m, y) }
+
+  test("the driver design is bit-identical to compress's sorted table at " +
+      "1, 3 and 8 partitions: unweighted, weighted, three outcomes") {
+    import scala.math.Ordering.Implicits._
+    def bits(v: Double) = java.lang.Double.doubleToRawLongBits(v)
+    val all = rows.collect()
+    for ((yCols, weight) <- Seq((Seq("y1"), None), (Nil, Some("w")),
+        (Seq("y1", "y2", "y3"), None))) {
+      val want = CellDesign.compress(rows, yCols, xs, col("state"), weight)
+        .collect().toSeq
+        .map(r => (r.getString(0), Seq(1.0, r.getDouble(1), r.getDouble(2)), r))
+        .sortBy { case (a, x, _) => (a, x) }
+      for (p <- Seq(1, 3, 8)) {
+        val ds = CellDesign.buildAll(rows.repartition(p), yCols, xs, col("state"),
+          weight, CellDesign.MaxLocalCells)
+        assert(ds.length == math.max(1, yCols.length) && ds.forall(_.isLocal))
+        ds.zipWithIndex.foreach { case (d, j) =>
+          val exp = want.map { case (a, x, r) => (a, x.map(bits), bits(r.getDouble(4)),
+            if (yCols.isEmpty) bits(0.0) else bits(r.getDouble(5 + j))) }
+          assert(bitsOf(d) == exp, s"$yCols $weight at $p partitions, design $j")
+          val n = want.groupMapReduce(_._1)(_._3.getLong(3))(_ + _)
+          assert(d.areas.toSeq == n.keys.toSeq.sorted &&
+            d.nByArea.toSeq == d.areas.toSeq.map(n))
+        }
+      }
+      // the weight totals are the exact decimal sums, which a double
+      // fold over the rows misses
+      if (weight.isDefined) {
+        val folded = all.groupMapReduce(r => (r.getString(0), r.getDouble(1) + 0.0,
+          r.getDouble(2)))(_.getDouble(3))(_ + _)
+        assert(want.exists { case (a, x, r) => r.getDouble(4) != folded((a, x(1), x(2))) })
+      }
+    }
+  }
+
+  test("a driver-side build, usingWeighted or buildAll of a cached input " +
+      "runs one Spark job") {
+    val cached = rows.cache()
+    try {
+      cached.count()
+      assert(jobsOf(CellDesign.build(cached, "y1", xs, col("state"),
+        CellDesign.MaxLocalCells)) == 1)
+      assert(jobsOf(CellDesign.usingWeighted(cached, "w", xs, col("state")) { d =>
+        assert(d.isLocal) }) == 1)
+      assert(jobsOf(CellDesign.buildAll(cached, Seq("y1", "y2", "y3"), xs,
+        col("state"), None, CellDesign.MaxLocalCells)) == 1)
+    } finally cached.unpersist()
+  }
+
+  test("a table goes distributed when one partition alone is over the " +
+      "bound, and when each partition fits but their union does not") {
+    val s = spark
+    import s.implicits._
+    // 8 one-row cells, parallelized in order: 4 in each of 2 partitions
+    val df = s.sparkContext.parallelize((0 until 8).map(i =>
+      ("a", i.toDouble, 0.0, i % 2)), 2).toDF("state", "x1", "x2", "y")
+    val local = CellDesign.build(df, "y", xs, col("state"), 8)
+    assert(local.isLocal)
+    val want = bitsOf(local).sortBy(_.toString)
+    for (maxLocal <- Seq(3, 5)) {
+      val d = CellDesign.build(df, "y", xs, col("state"), maxLocal)
+      try {
+        assert(!d.isLocal, s"maxLocal $maxLocal")
+        assert(d.areas.toSeq == Seq("a") && d.nByArea.toSeq == Seq(8L))
+        assert(bitsOf(d).sortBy(_.toString) == want)
+      } finally d.unpersist()
+    }
+  }
+
+  test("an outcome other than 0 or 1 is rejected on either side, naming " +
+      "the column") {
+    val bad = rows.withColumn("y2", when(col("x2") === 1.0 && col("y1") === 1, 2)
+      .otherwise(col("y2")))
+    for (maxLocal <- Seq(CellDesign.MaxLocalCells, 0)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException](CellDesign.buildAll(bad,
+        Seq("y1", "y2", "y3"), xs, col("state"), None, maxLocal))
+      assert(e.getMessage.contains("outcome column 'y2'"), e.getMessage)
+      val e1 = intercept[IllegalArgumentException](CellDesign.build(
+        rows.withColumn("y1", col("y1") * 0.5), "y1", xs, col("state"), maxLocal))
+      assert(e1.getMessage.contains("outcome column 'y1'"), e1.getMessage)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    }
+  }
 }
 
 /** The test kernel lives outside the suite, so Spark can ship it. */

@@ -215,6 +215,55 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** `f`, failing if it leaves anything persisted but the returned
+    * frames' own checkpoint RDDs, which the ContextCleaner frees with
+    * the frames. `f` consumes its result, so a cache that fed it has
+    * been filled.
+    */
+  private def released[T](what: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = f
+    val leaked = (sc.getPersistentRDDs -- before).filterNot(_._2.isCheckpointed)
+    assert(leaked.isEmpty, s"$what left persisted RDDs $leaked")
+    out
+  }
+
+  test("simhashPairs releases its signature cache") {
+    val pairs = released("simhashPairs")(Dedup.simhashPairs(corpus, "id",
+      "text", maxHamming = 8).select("id_a", "id_b").as[(Long, Long)].collect().toSet)
+    assert(pairs.contains((1L, 3L)) && !pairs.contains((4L, 5L)), s"$pairs")
+  }
+
+  test("ngramJaccardJoin releases its shingle-set cache") {
+    val pairs = released("ngramJaccardJoin")(Dedup.ngramJaccardJoin(corpus, "id",
+      "text", shingleN = 2, threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
+    assert(pairs == naiveBigramPairs(0.5), s"$pairs")
+  }
+
+  test("containmentJoin releases its shingle-set cache") {
+    val sh = corpus.select($"id", TextAnalysis.tokens($"text").as("toks"))
+      .select($"id", array_distinct(TextAnalysis.shinglesOf($"toks", 2)).as("sh"))
+    val naive = sh.as("a").crossJoin(sh.as("b"))
+      .filter($"a.id" =!= $"b.id")
+      .filter(size(array_intersect($"a.sh", $"b.sh")).cast("double") /
+        size($"a.sh") >= 0.8)
+      .select("a.id", "b.id").as[(Long, Long)].collect().toSet
+    val got = released("containmentJoin")(Dedup.containmentJoin(corpus, "id",
+      "text", shingleN = 2, threshold = 0.8)
+      .select("id_in", "id_of").as[(Long, Long)].collect().toSet)
+    assert(got == naive && naive.contains((1L, 2L)), s"got=$got naive=$naive")
+  }
+
+  test("editDistance1Join releases its row and deletion-key caches") {
+    val df = Seq(1L -> "kitten", 2L -> "mitten", 3L -> "kitten",
+      4L -> null.asInstanceOf[String], 5L -> "sitting").toDF("id", "s")
+    val got = released("editDistance1Join")(Dedup.editDistance1Join(df, "id", "s")
+      .as[(Long, Long, Int)].collect().toSet)
+    assert(got == Set((1L, 2L, 1), (1L, 3L, 0), (2L, 3L, 1)), s"$got")
+  }
+
   test("prefix filtering is candidate-complete vs the naive all-pairs join") {
     import graft.ops.TextAnalysis
     // naive ground truth: all N^2/2 pairs, exact jaccard on shingle

@@ -115,6 +115,11 @@ class SurveySpec extends SparkSpec {
     assert(msg.contains("'cb'") && msg.contains("'b3'"), msg)
   }
 
+  test("rake rejects a target category with no sample rows") {
+    val msg = rakeError(df.filter($"cb" =!= "b2"), ta, tb)
+    assert(msg.contains("'cb'") && msg.contains("'b2'") && msg.contains("no rows"), msg)
+  }
+
   test("rake rejects a target table that lists a category twice") {
     val msg = rakeError(df, ta,
       tb.union(Seq(("b1", 200.0)).toDF("cb", "_target")))
